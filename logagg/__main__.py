@@ -22,10 +22,10 @@ import sys
 from pyspark.sql import functions as F
 
 
-def _spark(cpus: int):
+def _spark(cpus: int | None):
     from logagg.session import get_spark
 
-    return get_spark(app_name="logagg-cli", master=f"local[{cpus}]", shuffle_partitions=cpus)
+    return get_spark(app_name="logagg-cli", master=None if cpus is None else f"local[{cpus}]")
 
 
 def cmd_run(args) -> int:
@@ -80,7 +80,10 @@ def cmd_bench(args) -> int:
 
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="logagg")
-    ap.add_argument("--cpus", type=int, default=4)
+    ap.add_argument(
+        "--cpus", type=int, default=None,
+        help="local cores (default: $SPARK_GRAFT_CPUS, else every core this process may use)",
+    )
     sub = ap.add_subparsers(dest="cmd", required=True)
 
     p = sub.add_parser("run", help="parse → enrich → route → aggregate (resumable)")

@@ -1,13 +1,20 @@
 """Checkpoint / lineage store — resumable stage execution with metrics.
 
+The one commit-marker protocol of the engine: write the sink, then commit a
+JSON marker for the stage (atomically, via tmp+rename). A rerun skips any
+stage whose marker matches the current input fingerprint and reads its
+metrics back. The batch pipeline keeps its markers in ``<out>/_meta``
+(mid-pipeline kill and resume is a test case); every exactly-once streaming
+sink keeps one marker per micro-batch, ``batch-<id>.json``, in its
+``_batch_ledger`` directory.
+
 Iceberg snapshot properties are the production home for this metadata; the
 sandbox ships no Iceberg runtime jar, so the same contract is kept in a
-sidecar ``_meta`` directory of JSON markers (one per completed stage, written
-atomically via tmp+rename). A rerun skips any stage whose marker matches the
-current input fingerprint — mid-pipeline kill and resume is a test case.
-
-Marker contents double as the lineage/metrics record: row counts and
-per-partition (route) counts per stage.
+sidecar directory. Marker contents double as the lineage/metrics record:
+row counts and per-partition (route) counts per stage. The ledger IO runs
+on the driver, so plain posix IO is correct for any driver-visible
+directory; an object-store directory would swap it for the Hadoop
+FileSystem API, same protocol.
 """
 
 from __future__ import annotations
@@ -20,12 +27,12 @@ from typing import Any, Callable
 
 
 class StageLedger:
-    def __init__(self, outdir: str | Path):
-        self.meta_dir = Path(outdir) / "_meta"
-        self.meta_dir.mkdir(parents=True, exist_ok=True)
+    def __init__(self, marker_dir: str | Path):
+        self.marker_dir = Path(marker_dir)
+        self.marker_dir.mkdir(parents=True, exist_ok=True)
 
     def _marker(self, stage: str) -> Path:
-        return self.meta_dir / f"{stage}.json"
+        return self.marker_dir / f"{stage}.json"
 
     def completed(self, stage: str, fingerprint: str) -> dict | None:
         """Return the marker if the stage already ran against this input."""
@@ -63,8 +70,9 @@ class StageLedger:
         ``fn`` must do its own (idempotent) sink writes and return metrics.
         Returns (marker, ran): ran=False means the stage was skipped from
         checkpoint. Sinks are written before the marker — a crash between
-        the two reruns the stage, whose overwrite-mode write makes the retry
-        idempotent (no double-append).
+        the two reruns the stage, so an overwrite-mode sink makes the retry
+        idempotent (no double-append) and an append-mode sink is
+        at-least-once across that window.
         """
         existing = self.completed(stage, fingerprint)
         if existing is not None:

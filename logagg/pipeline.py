@@ -29,7 +29,7 @@ def run_pipeline(spark: SparkSession, sf_dir: str, outdir: str) -> dict:
     """Run (or resume) the full pipeline. Returns the stage ledger metrics."""
     cache = synth.ensure_cache(sf_dir, expected=False)
     out = Path(outdir)
-    ledger = StageLedger(out)
+    ledger = StageLedger(out / "_meta")
     pages_path = str(cache / "pages.parquet")
 
     results: dict[str, dict] = {}

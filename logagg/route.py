@@ -24,16 +24,18 @@ def route_counts(parsed: DataFrame) -> DataFrame:
     return with_route(parsed).groupBy("route").agg(F.count("*").alias("n"))
 
 
-def multiplex_write(parsed: DataFrame, outdir: str) -> dict[str, int]:
+def multiplex_write(parsed: DataFrame, outdir: str, mode: str = "overwrite") -> dict[str, int]:
     """Single-pass fan-out write partitioned by the routing keys.
 
     Returns per-route row counts (metrics) computed from the same DataFrame.
-    At cluster scale the same code writes to Iceberg via ``writeTo(...)``;
-    parquet-dir layout keeps the sandbox hermetic.
+    The batch pipeline overwrites its sink; the streaming sink appends one
+    micro-batch at a time (``mode="append"``). At cluster scale the same
+    code writes to Iceberg via ``writeTo(...)``; parquet-dir layout keeps
+    the sandbox hermetic.
     """
-    routed = with_route(parsed).persist()
+    routed = with_route(parsed).persist()  # write + count, one compute
     try:
-        routed.write.mode("overwrite").partitionBy("node", "log_type").parquet(outdir)
+        routed.write.mode(mode).partitionBy("node", "log_type").parquet(outdir)
         counts = {
             r["route"]: r["n"]
             for r in routed.groupBy("route").agg(F.count("*").alias("n")).collect()

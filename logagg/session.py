@@ -14,6 +14,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS``, else every core this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def default_driver_memory() -> str:
+    """``$LOGAGG_DRIVER_MEM``, else half of physical RAM capped at 16g. A
+    local-mode driver is the whole engine (heap + off-heap + Python
+    workers), so a heap sized to the machine gets the JVM OOM-killed."""
+    if os.environ.get("LOGAGG_DRIVER_MEM"):
+        return os.environ["LOGAGG_DRIVER_MEM"]
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(16 * 1024, ram_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "logagg",
     master: str | None = None,
@@ -22,12 +37,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the session.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to ``local[N]``, N = :func:`default_cpus`.
     ``shuffle_partitions`` defaults to the local core count — the single most
     important local-mode knob (200 default over-parallelizes small inputs and
     under-parallelizes huge ones).
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -47,7 +62,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("LOGAGG_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
     )

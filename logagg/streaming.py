@@ -11,19 +11,41 @@ with ``readStream.format("kafka")`` + a payload-decode select.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.types import StructType
 
 from logagg import parse, route
+from logagg.checkpoint import StageLedger
 from logagg.schemas import PAGES_SCHEMA
 
 
-def stream_pages(spark: SparkSession, pages_dir: str, max_files_per_trigger: int = 8) -> DataFrame:
+def _file_stream(
+    spark: SparkSession,
+    src_dir: str,
+    max_files_per_trigger: int = 8,
+    schema: StructType | None = None,
+) -> DataFrame:
+    """Parquet file stream over ``src_dir``. File streams need a fixed
+    schema: the caller's, else the one a batch read of the source infers."""
     return (
-        spark.readStream.schema(PAGES_SCHEMA)
+        spark.readStream.schema(schema or spark.read.parquet(src_dir).schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(pages_dir)
+        .parquet(src_dir)
     )
+
+
+def _drain(writer: DataStreamWriter) -> None:
+    """Start the query, run all currently available input (the
+    deterministic barrier), then stop it."""
+    q = writer.start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
 
 
 def streaming_sink_agg(pages_stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -50,18 +72,9 @@ def streaming_sink_agg(pages_stream: DataFrame, watermark: str = "2 hours") -> D
 def _drive_to_memory(
     df: DataFrame, output_mode: str, query_name: str, final_sql: str
 ) -> DataFrame:
-    """Shared test/bench drive loop: memory sink, processAllAvailable as the
-    deterministic barrier, then the final-state SQL over the sink table."""
-    q = (
-        df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    """Shared test/bench drive loop: memory sink, drained, then the
+    final-state SQL over the sink table."""
+    _drain(df.writeStream.outputMode(output_mode).format("memory").queryName(query_name))
     return df.sparkSession.sql(final_sql)
 
 
@@ -89,7 +102,7 @@ def run_streaming_dedup_to_memory(
 ) -> DataFrame:
     """Drive the streaming dedup over all available files (append mode —
     each kept row is emitted exactly once)."""
-    deduped = streaming_dedup(stream_pages(spark, pages_dir), watermark)
+    deduped = streaming_dedup(_file_stream(spark, pages_dir, schema=PAGES_SCHEMA), watermark)
     return _drive_to_memory(
         deduped.select("url", "text_md5"),
         "append",
@@ -113,63 +126,35 @@ def run_streaming_route_multiplex(
 
     ``foreachBatch`` is the right shape here: the partitioned write fans a
     micro-batch out to all N sinks in ONE pass, and the sink-side append is
-    keyed by batch_id through a commit ledger (``<outdir>/_batch_ledger/
-    batch-<id>.json``): a batch whose marker exists is SKIPPED on replay and
-    its per-route counts are read back from the marker, so re-delivery after
-    a post-commit failure (the common foreachBatch retry window: sink
-    committed, checkpoint offset not yet) neither duplicates sink rows nor
-    double-counts. The marker is written AFTER the append succeeds, so a
-    crash mid-append still replays that batch — at-least-once across that
-    narrower window; closing it needs a transactional table format (the
-    Iceberg branch in logagg.catalog, batch-id watermark in snapshot
-    metadata). Runs all currently available input (processAllAvailable)
-    and returns the per-route counts, replay-stable.
-
-    The ledger IO runs in the foreachBatch body — i.e. ON THE DRIVER (only
-    the DataFrame write distributes) — so plain posix IO is correct for any
-    driver-visible outdir; an object-store outdir would swap these few
-    lines for the Hadoop FileSystem API, same protocol.
+    keyed by batch_id through the commit ledger (:class:`logagg.checkpoint.
+    StageLedger` on ``<outdir>/_batch_ledger/``, one ``batch-<id>.json``
+    marker ``{"rows", "sinks"}`` per micro-batch): a batch whose marker
+    exists is SKIPPED on replay and its per-route counts are read back from
+    the marker, so re-delivery after a post-commit failure (the common
+    foreachBatch retry window: sink committed, checkpoint offset not yet)
+    neither duplicates sink rows nor double-counts. The marker is written
+    AFTER the append succeeds, so a crash mid-append still replays that
+    batch — at-least-once across that narrower window; closing it needs a
+    transactional table format (the Iceberg branch in logagg.catalog,
+    batch-id watermark in snapshot metadata). Runs all currently available
+    input and returns the per-route counts, replay-stable.
     """
-    import json
-    from pathlib import Path
-
     counts: dict[str, int] = {}
-    ledger = Path(outdir) / "_batch_ledger"
-    ledger.mkdir(parents=True, exist_ok=True)
+    ledger = StageLedger(Path(outdir) / "_batch_ledger")
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        marker = ledger / f"batch-{batch_id}.json"
-        if marker.exists():  # replayed batch: already committed — skip append
-            for rte, n in json.loads(marker.read_text()).items():
-                counts[rte] = counts.get(rte, 0) + n
-            return
-        routed = route.with_route(batch_df).persist()  # write + count, one compute
-        try:
-            routed.write.mode("append").partitionBy("node", "log_type").parquet(outdir)
-            batch_counts = {
-                r["route"]: r["n"]
-                for r in routed.groupBy("route").agg(F.count("*").alias("n")).collect()
-            }
-            tmp = marker.with_suffix(".json.tmp")
-            tmp.write_text(json.dumps(batch_counts))
-            tmp.rename(marker)  # atomic commit of the ledger entry
-            for rte, n in batch_counts.items():
-                counts[rte] = counts.get(rte, 0) + n
-        finally:
-            routed.unpersist()
+        def _append() -> dict:
+            sinks = route.multiplex_write(batch_df, outdir, mode="append")
+            return {"rows": sum(sinks.values()), "sinks": sinks}
+
+        marker, _ = ledger.run_stage(f"batch-{batch_id}", "route", _append)
+        for rte, n in marker["sinks"].items():
+            counts[rte] = counts.get(rte, 0) + n
 
     parsed = parse.parsed_records(
-        stream_pages(spark, pages_dir, max_files_per_trigger)
+        _file_stream(spark, pages_dir, max_files_per_trigger, PAGES_SCHEMA)
     )
-    q = (
-        parsed.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(parsed.writeStream.foreachBatch(_sink).option("checkpointLocation", checkpoint_dir))
     return counts
 
 
@@ -180,8 +165,7 @@ def stateful_host_counts(pages_stream: DataFrame) -> DataFrame:
     state machines). Emits the cumulative count on every update."""
     import pandas as pd
 
-    parsed = parse.parsed_records(pages_stream)
-    hosts = parsed.withColumn("host", F.regexp_extract("url", r"^[a-z]+://([^/]+)/", 1))
+    parsed = parse.parsed_records(pages_stream)  # stamps host (with_url_meta)
 
     def update(key, pdfs, state):
         total = state.get[0] if state.exists else 0
@@ -190,7 +174,7 @@ def stateful_host_counts(pages_stream: DataFrame) -> DataFrame:
         state.update((total,))
         yield pd.DataFrame({"host": [key[0]], "n_rows": [total]})
 
-    return hosts.groupBy("host").applyInPandasWithState(
+    return parsed.groupBy("host").applyInPandasWithState(
         update,
         outputStructType="host string, n_rows long",
         stateStructType="n long",
@@ -204,7 +188,7 @@ def run_stateful_to_memory(
 ) -> DataFrame:
     """Drive the stateful counter over all available files; the last update
     per host is the final count (updates append per micro-batch → max)."""
-    agg = stateful_host_counts(stream_pages(spark, pages_dir))
+    agg = stateful_host_counts(_file_stream(spark, pages_dir, schema=PAGES_SCHEMA))
     return _drive_to_memory(
         agg,
         "update",
@@ -218,7 +202,7 @@ def run_stream_to_memory(
 ) -> DataFrame:
     """Drive the stream over all currently-available files and return the
     final aggregate as a DataFrame."""
-    agg = streaming_sink_agg(stream_pages(spark, pages_dir))
+    agg = streaming_sink_agg(_file_stream(spark, pages_dir, schema=PAGES_SCHEMA))
     return _drive_to_memory(agg, "complete", query_name, f"SELECT * FROM {query_name}")
 
 
@@ -317,8 +301,7 @@ def run_sessions_tws_to_memory(
         staged = tempfile.mkdtemp(prefix="logagg-events-stream-")
         os.symlink(os.path.abspath(events_dir), os.path.join(staged, "part-00000.parquet"))
         events_dir = staged
-    schema = spark.read.parquet(events_dir).schema
-    stream = spark.readStream.schema(schema).parquet(events_dir)
+    stream = _file_stream(spark, events_dir)
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
@@ -368,7 +351,6 @@ def run_streaming_heavy_hitters(
     total distinct keys the counts are exact and equal the batch operator
     (pytest-pinned). Returns the final summary dict."""
     import json
-    from pathlib import Path
 
     from logagg import aggregate
     from logagg.refsketch import misra_gries_update_py
@@ -407,21 +389,8 @@ def run_streaming_heavy_hitters(
         for _, old in _state_files()[:-64]:
             old.unlink(missing_ok=True)
 
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    stream = _file_stream(spark, src_dir, max_files_per_trigger)
+    _drain(stream.writeStream.foreachBatch(_apply).option("checkpointLocation", checkpoint_dir))
     return _current_state()
 
 
@@ -455,8 +424,8 @@ def run_streaming_frontier(
        canonical keys are absorbed by the anti-join, duplicate bits by
        the OR), reading it back from parquet so the frame has no lineage
        through the index it appends to
-    4. atomic-rename the ledger marker
-       (``<seen_dir>/_batch_ledger/batch-<id>.json``)
+    4. commit the ledger marker (:class:`logagg.checkpoint.StageLedger`,
+       ``<seen_dir>/_batch_ledger/batch-<id>.json``)
 
     Replay decision table: marker present → fully committed, skip (count
     read back). Marker absent, landed ``_SUCCESS`` present → the store
@@ -464,56 +433,33 @@ def run_streaming_frontier(
     (NOT a re-probe — re-probing after a partial index append would find
     nothing fresh and overwrite the landed output with an empty frame,
     silently LOSING the batch). Neither → first attempt, full path.
-    The ledger/marker IO runs on the driver (plain posix), like
-    :func:`run_streaming_route_multiplex`.
 
     Output files carry the original columns plus ``_canon``; reading
     ``outdir`` whole adds the hive ``batch_id`` column. Returns
     {batch_id: fresh_rows}, replay-stable."""
-    import json
-    from pathlib import Path
-
     from logagg import frontier
 
     counts: dict[int, int] = {}
-    ledger = Path(seen_dir) / "_batch_ledger"
-    ledger.mkdir(parents=True, exist_ok=True)
+    ledger = StageLedger(Path(seen_dir) / "_batch_ledger")
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        marker = ledger / f"batch-{batch_id}.json"
-        if marker.exists():  # fully committed earlier — skip
-            counts[batch_id] = json.loads(marker.read_text())["n"]
-            return
-        land = f"{outdir}/batch_id={batch_id}"
-        if not (Path(land) / "_SUCCESS").exists():
-            fresh = frontier.unseen_in_batch(
-                batch_df, seen_dir, url_col=url_col,
-                n_bits=n_bits, n_hashes=n_hashes,
-            )
-            fresh.write.mode("overwrite").parquet(land)
-        landed = spark.read.parquet(land)
-        frontier.commit_seen(landed, seen_dir, n_bits=n_bits, n_hashes=n_hashes)
-        n = landed.count()
-        tmp = marker.with_suffix(".json.tmp")
-        tmp.write_text(json.dumps({"n": n}))
-        tmp.rename(marker)  # atomic commit of the ledger entry
-        counts[batch_id] = n
+        def _commit() -> dict:
+            land = f"{outdir}/batch_id={batch_id}"
+            if not (Path(land) / "_SUCCESS").exists():
+                fresh = frontier.unseen_in_batch(
+                    batch_df, seen_dir, url_col=url_col,
+                    n_bits=n_bits, n_hashes=n_hashes,
+                )
+                fresh.write.mode("overwrite").parquet(land)
+            landed = spark.read.parquet(land)
+            frontier.commit_seen(landed, seen_dir, n_bits=n_bits, n_hashes=n_hashes)
+            return {"n": landed.count()}
 
-    schema = spark.read.parquet(urls_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(urls_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+        marker, _ = ledger.run_stage(f"batch-{batch_id}", "frontier", _commit)
+        counts[batch_id] = marker["n"]
+
+    stream = _file_stream(spark, urls_dir, max_files_per_trigger)
+    _drain(stream.writeStream.foreachBatch(_sink).option("checkpointLocation", checkpoint_dir))
     return counts
 
 
@@ -579,21 +525,8 @@ def run_streaming_bottomk(
             shutil.rmtree(state_dir)
         os.rename(tmp, state_dir)
 
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    stream = _file_stream(spark, src_dir, max_files_per_trigger)
+    _drain(stream.writeStream.foreachBatch(_sink).option("checkpointLocation", checkpoint_dir))
     return spark.read.parquet(state_dir).count()
 
 
@@ -631,9 +564,9 @@ def run_streaming_curate(
     3. :func:`logagg.curate.commit_increment_state` from the LANDED
        parquet — idempotent: md5s and band rows already in the state are
        anti-joined away, so a re-commit after any crash adds nothing
-    4. atomic-rename the ledger marker
-       (``<state_dir>/_batch_ledger/batch-<id>.json``, carrying the
-       stage manifest)
+    4. commit the ledger marker (:class:`logagg.checkpoint.StageLedger`,
+       ``<state_dir>/_batch_ledger/batch-<id>.json``, carrying the stage
+       manifest)
 
     Replay decision table: marker → fully committed, skip. No marker but
     BOTH landed ``_SUCCESS`` present → re-commit from the landed output
@@ -641,78 +574,58 @@ def run_streaming_curate(
     is overwritten; state is untouched until both are landed, so the
     probe is still sound). The near-dup verification corpus is the union
     of COMMITTED batches' survivors (enumerated from the ledger — never
-    a half-landed dir). Returns {batch_id: {"n": survivors,
-    "manifest": [...] | None, "recovered": bool}}."""
-    import json
-    from pathlib import Path
-
+    a half-landed dir). Returns {batch_id: ledger marker}, each marker
+    carrying {"n": survivors, "manifest": [...] | None, "recovered":
+    bool}."""
     from logagg import curate as curatemod
 
     counts: dict[int, dict] = {}
-    ledger = Path(state_dir) / "_batch_ledger"
-    ledger.mkdir(parents=True, exist_ok=True)
+    ledger = StageLedger(Path(state_dir) / "_batch_ledger")
     schema = spark.read.parquet(docs_dir).schema
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        marker = ledger / f"batch-{batch_id}.json"
-        if marker.exists():  # fully committed earlier — skip
-            counts[batch_id] = json.loads(marker.read_text())
-            return
-        land_surv = f"{outdir}/batch_id={batch_id}"
-        land_md5 = f"{state_dir}/_pending/batch-{batch_id}"
-        landed = (Path(land_surv) / "_SUCCESS").exists() and (
-            Path(land_md5) / "_SUCCESS"
-        ).exists()
-        manifest = None
-        if not landed:
-            committed = sorted(
-                int(p.stem.split("-")[1]) for p in ledger.glob("batch-*.json")
+        def _commit() -> dict:
+            land_surv = f"{outdir}/batch_id={batch_id}"
+            land_md5 = f"{state_dir}/_pending/batch-{batch_id}"
+            landed = (Path(land_surv) / "_SUCCESS").exists() and (
+                Path(land_md5) / "_SUCCESS"
+            ).exists()
+            manifest = None
+            if not landed:
+                committed = sorted(
+                    int(p.stem.split("-")[1]) for p in ledger.marker_dir.glob("batch-*.json")
+                )
+                corpus = (
+                    spark.read.schema(schema).parquet(
+                        *[f"{outdir}/batch_id={b}" for b in committed]
+                    ).select(id_col, text_col)
+                    if committed
+                    else None
+                )
+                res = curatemod.curate_increment(
+                    batch_df,
+                    state_dir,
+                    id_col=id_col,
+                    text_col=text_col,
+                    corpus=corpus,
+                    near_dedup=near_dedup,
+                    update_state=False,
+                    **filter_kwargs,
+                )
+                res.pending["md5"].write.mode("overwrite").parquet(land_md5)
+                res.docs.write.mode("overwrite").parquet(land_surv)
+                manifest = res.manifest
+                res.pending["md5"].unpersist()
+                res.unpersist()
+            curatemod.commit_increment_state(
+                spark, state_dir, land_md5, land_surv,
+                id_col=id_col, text_col=text_col, near_dedup=near_dedup,
             )
-            corpus = (
-                spark.read.schema(schema).parquet(
-                    *[f"{outdir}/batch_id={b}" for b in committed]
-                ).select(id_col, text_col)
-                if committed
-                else None
-            )
-            res = curatemod.curate_increment(
-                batch_df,
-                state_dir,
-                id_col=id_col,
-                text_col=text_col,
-                corpus=corpus,
-                near_dedup=near_dedup,
-                update_state=False,
-                **filter_kwargs,
-            )
-            res.pending["md5"].write.mode("overwrite").parquet(land_md5)
-            res.docs.write.mode("overwrite").parquet(land_surv)
-            manifest = res.manifest
-            res.pending["md5"].unpersist()
-            res.unpersist()
-        curatemod.commit_increment_state(
-            spark, state_dir, land_md5, land_surv,
-            id_col=id_col, text_col=text_col, near_dedup=near_dedup,
-        )
-        n = spark.read.schema(schema).parquet(land_surv).count()
-        entry = {"n": n, "manifest": manifest, "recovered": manifest is None}
-        tmp = marker.with_suffix(".json.tmp")
-        tmp.write_text(json.dumps(entry))
-        tmp.rename(marker)  # atomic commit of the ledger entry
-        counts[batch_id] = entry
+            n = spark.read.schema(schema).parquet(land_surv).count()
+            return {"n": n, "manifest": manifest, "recovered": manifest is None}
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+        counts[batch_id], _ = ledger.run_stage(f"batch-{batch_id}", "curate", _commit)
+
+    stream = _file_stream(spark, docs_dir, max_files_per_trigger, schema)
+    _drain(stream.writeStream.foreachBatch(_sink).option("checkpointLocation", checkpoint_dir))
     return counts

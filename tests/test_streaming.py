@@ -187,6 +187,31 @@ def test_streaming_route_multiplex_equals_batch(spark, pages_cache, tmp_path):
     assert spark.read.parquet(str(tmp_path / "routed")).count() == total_before
 
 
+def test_streaming_route_ledger_one_marker_per_batch(spark, pages_cache, tmp_path):
+    """The route sink's ledger contract, as readers of the sink see it: one
+    ``<outdir>/_batch_ledger/batch-<id>.json`` marker per micro-batch, each
+    shaped like the batch route marker ({"rows", "sinks"}), and the markers'
+    per-sink counts sum to the returned counts."""
+    import json
+    from collections import Counter
+
+    src = tmp_path / "pages3"
+    spark.read.parquet(str(pages_cache / "pages.parquet")).repartition(3).write.parquet(str(src))
+    n_files = len(list(src.glob("*.parquet")))
+    assert n_files == 3
+    out = tmp_path / "routed"
+    counts = streaming.run_streaming_route_multiplex(
+        spark, str(src), str(out), str(tmp_path / "ckpt"), max_files_per_trigger=1
+    )
+    markers = [json.loads(p.read_text()) for p in (out / "_batch_ledger").glob("batch-*.json")]
+    assert sorted(m["stage"] for m in markers) == [f"batch-{i}" for i in range(n_files)]
+    summed: Counter = Counter()
+    for m in markers:
+        assert m["rows"] == sum(m["sinks"].values()) > 0
+        summed.update(m["sinks"])
+    assert dict(summed) == counts
+
+
 def test_streaming_heavy_hitters_equals_batch_and_replays(spark, tmp_path):
     """With capacity >= total distinct keys the streamed MG state is exact,
     so it must equal the batch groupBy counts; a full replay (fresh
