@@ -28,6 +28,7 @@ from logagg import (
     similarity,
     synth,
     textstats,
+    util,
     view,
 )
 
@@ -382,20 +383,14 @@ _DERIVED_DIR = _Path(__file__).resolve().parent / ".cache" / "derived"
 
 
 def _derived_path(spark: SparkSession, sf: str, name: str) -> str:
-    """Executor-reachable parquet location for a derived artifact. Mirrors
-    the dup_clusters guard (logagg/dedup.py): on a non-local master the
-    repo-local default is NOT visible to remote executors (silently partial
-    per-executor writes, not an error), so derive from the session's
-    checkpoint dir when set and refuse the driver-local default otherwise."""
+    """Executor-reachable parquet location for a derived artifact. On a
+    non-local master the repo-local default is NOT visible to remote
+    executors (silently partial per-executor writes, not an error), so
+    derive from the session's checkpoint dir under the scratch guard
+    (util.checkpoint_root), which refuses a session without one."""
     if not spark.conf.get("spark.master", "").startswith("local"):
-        sc_ckpt = spark.sparkContext.getCheckpointDir()
-        if not sc_ckpt:
-            raise ValueError(
-                f"materialize='path' for {name!r} needs an executor-reachable "
-                "location on a non-local master — call spark.sparkContext."
-                "setCheckpointDir(...) (the default is a driver-local repo path)"
-            )
-        return f"{sc_ckpt.rstrip('/')}/logagg-derived/{synth.cache_dir_for(sf).name}/{name}"
+        root = util.checkpoint_root(spark, f"materialize='path' for {name!r}")
+        return f"{root}/logagg-derived/{synth.cache_dir_for(sf).name}/{name}"
     out = _DERIVED_DIR / synth.cache_dir_for(sf).name
     out.mkdir(parents=True, exist_ok=True)
     return str(out / name)
@@ -804,7 +799,7 @@ _LINKS_MEMO: dict[str, tuple[str, str]] = {}
 
 
 def _links(spark: SparkSession, sf: str) -> DataFrame:
-    from logagg import linkgraph, util
+    from logagg import linkgraph
 
     app = spark.sparkContext.applicationId
     path = _derived_path(spark, sf, "links")

@@ -141,8 +141,7 @@ def scaling_worker(master: str, sf_dir: str, replicate: int, rep_mode: str) -> N
     from logagg import synth
 
     synth.ensure_cache(sf_dir, expected=False)  # warm cache before timing
-    n = int(master[6:-1]) if master.startswith("local[") else CPUS
-    spark = get_spark(app_name=f"bench-{master}", master=master, shuffle_partitions=n)
+    spark = get_spark(app_name=f"bench-{master}", master=master)
     from pyspark.sql import functions as F
 
     # warm-up = one full pass of the IDENTICAL job, then time the second
@@ -919,7 +918,7 @@ def main() -> None:
     from logagg.session import get_spark
 
     synth.ensure_cache(args.sf_dir, expected=False)
-    spark = get_spark(app_name="bench", master=f"local[{CPUS}]", shuffle_partitions=CPUS)
+    spark = get_spark(app_name="bench", master=f"local[{CPUS}]")
 
     # headline timings are BEST-OF-2 (the discipline the scaling ladder
     # already applies): the first pass pays one-time costs a long production

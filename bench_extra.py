@@ -189,9 +189,7 @@ def main() -> None:
     from logagg.session import get_spark
 
     synth.ensure_cache(SF_DIR, expected=False)
-    spark = get_spark(
-        app_name="bench-extra", master=f"local[{CPUS}]", shuffle_partitions=CPUS
-    )
+    spark = get_spark(app_name="bench-extra", master=f"local[{CPUS}]")
 
     if args.phases:
         out = {}

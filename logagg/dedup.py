@@ -300,85 +300,58 @@ def dup_clusters(
     combines min-label propagation over the edge list with pointer doubling
     (label := label's current label), so iterations needed are O(log
     diameter), not O(diameter) — a 40-hop near-dup chain converges in ~6
-    rounds. Per-iteration state is checkpointed to parquet (``checkpoint_
-    dir``; a temp dir by default — on a cluster pass durable storage), which
-    truncates the iterative join lineage and leaves no cached RDDs behind.
+    rounds. Per-iteration state lands in parquet through
+    :func:`util.scratch`, which truncates the iterative join lineage and
+    leaves no cached RDDs behind.
 
     Convergence is proven, not assumed: the loop exits on a changed-label
     count of 0; exhausting ``max_iters`` first raises (silently-wrong
     cluster ids are worse than a crash).
 
-    ``checkpoint_dir`` defaults to the session's
-    ``sparkContext.getCheckpointDir()`` when set (executor-reachable by
-    contract; a fresh subdir is claimed per run), else a driver-local temp
-    dir — allowed only on a local master, refused otherwise.
-    ``materialize="path"`` + ``out_path`` writes the final labels to
-    parquet (the 100 TB result shape); the local default pulls the
-    bounded result off the temp checkpoint before it is removed. All
-    argument validation (mode, out_path, checkpoint reachability) runs
-    BEFORE any job, and when ``pairs`` is None the internal
-    ``jaccard_pairs`` call inherits the materialization mode (path mode
-    lands the from-scratch pair list under the checkpoint dir) — so the
-    expensive pair computation can neither be wasted by a late validation
-    failure nor forced through the driver.
+    Scratch state goes to a fresh subdir of ``checkpoint_dir`` when given,
+    else of the session's ``sparkContext`` checkpoint dir when set
+    (executor-reachable by contract), else a driver-local temp dir —
+    allowed only on a local master, refused otherwise. In the first two
+    cases the subdir is left in place and the local-mode result is read
+    lazily from it; the temp dir is removed on return, after the bounded
+    result is pulled off it. ``materialize="path"`` + ``out_path`` writes
+    the final labels to parquet (the 100 TB result shape). All argument
+    validation (mode, out_path, checkpoint reachability) runs BEFORE any
+    job, and when ``pairs`` is None the internal ``jaccard_pairs`` call
+    inherits the materialization mode (path mode lands the from-scratch
+    pair list under the scratch dir) — so the expensive pair computation
+    can neither be wasted by a late validation failure nor forced through
+    the driver.
     """
-    import shutil
-    import tempfile
-
     spark = df.sparkSession
     # validate EVERYTHING before any job runs: pairs-from-scratch is the
     # expensive step, and failing after it completes wastes the whole
-    # computation (ADVICE r4)
-    if materialize not in ("local", "path"):
-        raise ValueError(f"materialize must be 'local' or 'path', got {materialize!r}")
-    if materialize == "path" and not out_path:
-        raise ValueError("materialize='path' requires out_path")
-    if checkpoint_dir is None:
-        # derive from the session's checkpoint config when set — that dir is
-        # executor-reachable by contract, so clustering works on a real
-        # cluster with zero extra arguments (fresh subdir per run; left in
-        # place like an explicit checkpoint_dir, since the lazy result reads
-        # from it)
-        sc_ckpt = spark.sparkContext.getCheckpointDir()
-        if sc_ckpt:
-            import uuid
-
-            checkpoint_dir = f"{sc_ckpt.rstrip('/')}/logagg-cc-{uuid.uuid4().hex[:8]}"
-    owns_tmp = checkpoint_dir is None
-    if owns_tmp and not spark.conf.get("spark.master", "").startswith("local"):
-        # a driver-local mkdtemp path is not visible to remote executors —
-        # silently-empty reads, not an error, so refuse up front
-        raise ValueError(
-            "dup_clusters needs an explicit executor-reachable checkpoint_dir "
-            "(or spark.sparkContext.setCheckpointDir) on a non-local master — "
-            "the default is a driver-local temp dir"
-        )
-    tmp = checkpoint_dir or tempfile.mkdtemp(prefix="logagg-cc-")
-    try:
+    # computation (the scratch guard raises on entry)
+    util.check_materialize(materialize, out_path)
+    with util.scratch(spark, "logagg-cc", base=checkpoint_dir) as land:
         if pairs is None:
             # thread the caller's materialization mode through: in path mode
             # the from-scratch pair list lands in parquet under the (already
-            # validated, executor-reachable) checkpoint dir — the driver
-            # never holds it
+            # validated, executor-reachable) scratch dir — the driver never
+            # holds it
             pairs = jaccard_pairs(
                 df,
                 id_col,
                 text_col,
                 n_docs=n_docs,
                 materialize=materialize,
-                out_path=f"{tmp}/pairs" if materialize == "path" else None,
+                out_path=land.path() if materialize == "path" else None,
             )
-        edges_path = f"{tmp}/edges"
-        pairs.select(F.col("url_a").alias("src"), F.col("url_b").alias("dst")).union(
-            pairs.select(F.col("url_b").alias("src"), F.col("url_a").alias("dst"))
-        ).write.mode("overwrite").parquet(edges_path)
-        edges = spark.read.parquet(edges_path)
-
-        label_paths = (f"{tmp}/labels0", f"{tmp}/labels1")
-        edges.select(F.col("src").alias("id")).distinct().withColumn(
-            "label", F.col("id")
-        ).write.mode("overwrite").parquet(label_paths[0])
-        labels = spark.read.parquet(label_paths[0])
+        edges = land(
+            pairs.select(F.col("url_a").alias("src"), F.col("url_b").alias("dst")).union(
+                pairs.select(F.col("url_b").alias("src"), F.col("url_a").alias("dst"))
+            )
+        )
+        labels = land(
+            edges.select(F.col("src").alias("id")).distinct().withColumn(
+                "label", F.col("id")
+            )
+        )
 
         converged = False
         for it in range(max_iters):
@@ -400,16 +373,13 @@ def dup_clusters(
                 F.col("id").alias("_hid"), F.col("label").alias("_hlabel")
             )
             new_label = F.least("label", F.coalesce("_hlabel", "label"))
-            doubled = stepped.join(
-                hop, stepped["label"] == hop["_hid"], "left"
-            ).select(
-                "id",
-                new_label.alias("label"),
-                (new_label != F.col("_old")).alias("_changed"),
+            new_labels = land(
+                stepped.join(hop, stepped["label"] == hop["_hid"], "left").select(
+                    "id",
+                    new_label.alias("label"),
+                    (new_label != F.col("_old")).alias("_changed"),
+                )
             )
-            step_path = label_paths[(it + 1) % 2]
-            doubled.write.mode("overwrite").parquet(step_path)
-            new_labels = spark.read.parquet(step_path)
             changed = new_labels.filter(F.col("_changed")).count()
             labels = new_labels.select("id", "label")
             if changed == 0:
@@ -425,17 +395,14 @@ def dup_clusters(
             F.col("id").alias(id_col), F.col("label").alias("cluster")
         )
         if materialize == "path":
-            # durable landing: write before the temp checkpoint dir (which
-            # backs `labels`) is removed
+            # durable landing: write before a temp scratch dir (which backs
+            # `labels`) is removed
             return util.materialize(result, "path", out_path)
-        if owns_tmp:
-            # bounded-by-design result (≤ 2·|pairs| rows): pull it off the
-            # temp checkpoint storage so the dir can be removed
-            return util.materialize_local(result)
-        return result  # parquet-backed in the caller's checkpoint_dir
-    finally:
-        if owns_tmp:
-            shutil.rmtree(tmp, ignore_errors=True)
+        if land.kept:
+            return result  # parquet-backed in the kept scratch dir
+        # bounded-by-design result (≤ 2·|pairs| rows): pull it off the temp
+        # scratch dir so the dir can be removed
+        return util.materialize_local(result)
 
 
 # --------------------------------------------------------------- SimHash

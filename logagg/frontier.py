@@ -62,7 +62,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from logagg import textstats
+from logagg import textstats, util
 
 RULES_SCHEMA = (
     "host string, agent string, kind string, pattern string, "
@@ -765,12 +765,7 @@ def resolve_redirects(
     mode, same contract as the dedup pair ops."""
     import math as _math
 
-    if materialize not in ("local", "path"):
-        raise ValueError(
-            f"materialize must be 'local' or 'path', got {materialize!r}"
-        )
-    if materialize == "path" and not out_path:
-        raise ValueError("materialize='path' requires out_path")
+    util.check_materialize(materialize, out_path)
 
     m = (
         redirects.select(
@@ -815,8 +810,6 @@ def resolve_redirects(
             done.alias("resolved"),
         )
     )
-    from logagg import util
-
     res = util.materialize(out, mode=materialize, path=out_path)
     if prev is not None:
         prev.unpersist()

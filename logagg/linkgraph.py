@@ -20,9 +20,9 @@ operators:
   Each iteration: contributions = edges ⋈ ranks on ``src`` → ONE
   ``sum`` aggregation on ``dst``. Edges are hash-partitioned on ``src``
   once and persisted, so every iteration's join reuses that layout and
-  only the (#nodes-sized) rank table shuffles. Lineage is cut every
-  iteration (parquet checkpoint on a cluster, ``localCheckpoint``
-  locally — the dup_clusters contract, including the non-local-master
+  only the (#nodes-sized) rank table shuffles. Every iteration's ranks
+  land in parquet through :func:`util.scratch` (the scratch contract
+  :func:`hits` and dup_clusters share, including the non-local-master
   guard), so 50 iterations never build a 50-deep plan. Convergence =
   L1 delta below ``tol`` (one scalar per iteration off an aggregate —
   the only driver traffic); a non-converged run RAISES rather than
@@ -263,7 +263,6 @@ def pagerank(
     max_iter: int = 40,
     tol: float = 1e-6,
     weighted: bool = False,
-    checkpoint_every: int = 5,
     partitions: int | None = None,
     materialize: str = "local",
     out_path: str | None = None,
@@ -305,10 +304,12 @@ def pagerank(
     Iteration shape (the plan that survives 100×): edges repartitioned on
     ``src`` ONCE and persisted; per iteration one join on ``src`` (rank
     table is #nodes-sized — tiny next to edges), one ``sum`` agg on
-    ``dst``, two scalar aggregates (dangling mass, L1 delta). Lineage cut
-    every ``checkpoint_every`` iterations via the dup_clusters checkpoint
-    contract: a configured ``sparkContext`` checkpoint dir (executor-
-    reachable by contract) gets a fresh subdir, left in place; otherwise a
+    ``dst``, and one scalar aggregate (next round's dangling mass, plus
+    the L1 delta against the old ranks when ``tol`` > 0). Each
+    iteration's ranks land in parquet through :func:`util.scratch`, so
+    every plan is one iteration deep and nothing is persisted between
+    iterations: the session checkpoint dir (executor-reachable by
+    contract) gets a fresh subdir, left in place; otherwise a
     driver-local temp dir — allowed only on a local master, refused
     elsewhere — removed on return after the (#hosts-sized, bounded)
     result is materialized. ``materialize="path"`` + ``out_path`` lands
@@ -321,276 +322,154 @@ def pagerank(
     production host-rank jobs actually run (published web host ranks are
     fixed-budget power iterations; beyond ~an L1 delta of 1e-4 the
     ORDERING of hosts is already stable even though the values drift)."""
-    import shutil
-    import tempfile
-    import uuid
-
     spark = edges.sparkSession
     if on_max_iter not in ("raise", "return"):
         raise ValueError(
             f"on_max_iter must be 'raise' or 'return', got {on_max_iter!r}"
         )
-    if materialize not in ("local", "path"):
-        raise ValueError(f"materialize must be 'local' or 'path', got {materialize!r}")
-    if materialize == "path" and not out_path:
-        raise ValueError("materialize='path' requires out_path")
-    sc_ckpt = spark.sparkContext.getCheckpointDir()
-    if sc_ckpt:
-        base = f"{sc_ckpt.rstrip('/')}/logagg-pr-{uuid.uuid4().hex[:8]}"
-        owns_tmp = False
-    elif spark.conf.get("spark.master", "").startswith("local"):
-        base = tempfile.mkdtemp(prefix="logagg-pr-")
-        owns_tmp = True
-    else:
-        raise ValueError(
-            "pagerank needs spark.sparkContext.setCheckpointDir (executor-"
-            "reachable storage) on a non-local master — the default "
-            "checkpoint location is a driver-local temp dir"
+    if tol <= 0.0 and on_max_iter == "raise":
+        raise RuntimeError(
+            f"pagerank cannot converge with tol {tol!r} ≤ 0 — "
+            "fixed-budget runs must pass on_max_iter='return'"
         )
-
-    n_cuts = [0]
-
-    def cut(df: DataFrame) -> DataFrame:
-        # unique dir per cut, nothing reused or deleted mid-run: an evicted
-        # persisted intermediate may recompute from lineage that reads ANY
-        # earlier cut, so overwriting one is silent corruption
-        path = f"{base}/iter_{n_cuts[0]}"
-        n_cuts[0] += 1
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-
-    w = F.col("n_links").cast("double") if weighted else F.lit(1.0)
-    e = edges.select(
-        F.col("src").cast("string"),
-        F.col("dst").cast("string"),
-        w.alias("w"),
-    ).filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-    if partitions:
-        e = e.repartition(partitions, "src")
-    else:
-        e = e.repartition("src")
-    # per-src normalized vote share: w / total outgoing weight
-    out_w = e.groupBy("src").agg(F.sum("w").alias("_ow"))
-    e = e.join(out_w, "src").select(
-        "src", "dst", (F.col("w") / F.col("_ow")).alias("share")
-    )
-    e = e.persist()
-
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()
-    if n == 0:
-        e.unpersist()
-        nodes.unpersist()
-        empty = spark.createDataFrame([], "node string, rank double")
-        if owns_tmp:
-            shutil.rmtree(base, ignore_errors=True)
-        if materialize == "path":
-            return util.materialize(empty, mode="path", path=out_path)
-        return empty
-    # used every iteration (dangling-mass accounting) — persist once instead
-    # of re-running the distinct per iteration off the cached edge list
-    src_nodes = e.select(F.col("src").alias("_src_node")).distinct().persist()
-
-    # per-node teleport share t(v): uniform 1/n, or the renormalized
-    # personalization vector (TrustRank when the weights are a seed set)
-    if teleport_weights is not None:
-        tw = teleport_weights.select(
-            F.col("node").cast("string").alias("node"),
-            F.col("weight").cast("double").alias("_tw"),
-        )
-        joined = nodes.join(tw, "node", "left").select(
-            "node", F.coalesce("_tw", F.lit(0.0)).alias("_tw")
-        )
-        t_total = joined.agg(F.sum("_tw")).collect()[0][0] or 0.0
-        if t_total <= 0.0:
-            e.unpersist()
-            nodes.unpersist()
-            if owns_tmp:
-                shutil.rmtree(base, ignore_errors=True)
-            raise ValueError(
-                "teleport_weights carries no positive weight on any graph "
-                "node — the personalization vector is undefined"
-            )
-        tnodes = joined.select(
-            "node", (F.col("_tw") / t_total).alias("t")
+    util.check_materialize(materialize, out_path)
+    with util.scratch(spark, "logagg-pr") as land:
+        w = F.col("n_links").cast("double") if weighted else F.lit(1.0)
+        e = edges.select(
+            F.col("src").cast("string"),
+            F.col("dst").cast("string"),
+            w.alias("w"),
+        ).filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        if partitions:
+            e = e.repartition(partitions, "src")
+        else:
+            e = e.repartition("src")
+        # per-src normalized vote share: w / total outgoing weight
+        out_w = e.groupBy("src").agg(F.sum("w").alias("_ow"))
+        e = e.join(out_w, "src").select(
+            "src", "dst", (F.col("w") / F.col("_ow")).alias("share")
         ).persist()
-    else:
-        tnodes = nodes.select("node", F.lit(1.0 / n).alias("t")).persist()
-
-    if init_ranks is not None:
-        ir = init_ranks.select(
-            F.col("node").cast("string").alias("node"),
-            F.col("rank").cast("double").alias("_ir"),
-        )
-        r0 = nodes.join(ir, "node", "left").select(
-            "node", F.coalesce("_ir", F.lit(1.0 / n)).alias("rank")
-        )
-        r_total = r0.agg(F.sum("rank")).collect()[0][0] or 0.0
-        if r_total <= 0.0:
-            e.unpersist()
-            nodes.unpersist()
-            tnodes.unpersist()
-            if owns_tmp:
-                shutil.rmtree(base, ignore_errors=True)
-            raise ValueError(
-                "init_ranks carries no positive mass on any graph node — "
-                "cannot warm-start from it"
+        # the node table carries the dangling-node membership (`_is_src`)
+        # from here on, so every iteration's dangling mass is one
+        # flag-filtered sum — no per-iteration join against the source set
+        nodes = (
+            e.select(F.col("src").alias("node"), F.lit(True).alias("_is_src"))
+            .union(
+                e.select(F.col("dst").alias("node"), F.lit(False).alias("_is_src"))
             )
-        ranks = cut(r0.select("node", (F.col("rank") / r_total).alias("rank")))
-    else:
-        ranks = cut(tnodes.select("node", F.col("t").alias("rank")))
-    converged = False
-    tn = None
-    if tol <= 0.0:
-        # FIXED-BUDGET mode (the production host-rank contract): tol can
-        # never stop the loop, so the per-iteration stop-rule join against
-        # the OLD ranks is dead work. The dangling-node membership is
-        # folded into the node table ONCE (`_is_src` flag) and carried
-        # through each iteration, so the per-iteration driver job is a
-        # two-join chain + one flag-filtered sum — not the eager path's
-        # four joins + re-distinct of the source set. (A fully lazy
-        # variant with the dangling mass as a broadcast 1-row frame was
-        # measured 2× SLOWER: each checkpoint job unwinds a chain of
-        # nested broadcast sub-jobs with per-job AQE overhead.) The
-        # recurrence is expression-for-expression the eager loop's:
-        # ((1-d) + d·dangling)·t + d·contrib.
-        tn = (
-            tnodes.join(
-                src_nodes, tnodes["node"] == src_nodes["_src_node"], "left"
-            )
-            .select(
-                "node", "t", src_nodes["_src_node"].isNotNull().alias("_is_src")
-            )
+            .groupBy("node")
+            .agg(F.max("_is_src").alias("_is_src"))
             .persist()
         )
-        dangling = (
-            ranks.join(
-                src_nodes, ranks["node"] == src_nodes["_src_node"], "left_anti"
-            )
-            .agg(F.sum("rank"))
-            .collect()[0][0]
-            or 0.0
-        )
-        for it in range(max_iter):
-            contrib = (
-                e.join(ranks, e["src"] == ranks["node"])
-                .select("dst", (F.col("share") * F.col("rank")).alias("c"))
-                .groupBy("dst")
-                .agg(F.sum("c").alias("contrib"))
-            )
-            tele_scale = (1.0 - damping) + damping * dangling
-            new_ranks = (
-                tn.join(contrib, tn["node"] == contrib["dst"], "left")
-                .select(
-                    "node",
-                    (
-                        F.lit(tele_scale) * F.col("t")
-                        + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
-                    ).alias("rank"),
-                    "_is_src",
+        held = [e, nodes]
+        try:
+            n = nodes.count()
+            if n == 0:
+                empty = spark.createDataFrame([], "node string, rank double")
+                return util.materialize(empty, materialize, out_path)
+
+            # per-node teleport share t(v): uniform 1/n, or the renormalized
+            # personalization vector (TrustRank when the weights are a seed set)
+            if teleport_weights is not None:
+                tw = teleport_weights.select(
+                    F.col("node").cast("string").alias("node"),
+                    F.col("weight").cast("double").alias("_tw"),
                 )
-            )
-            if (it + 1) % checkpoint_every == 0 or it == max_iter - 1:
-                new_ranks = cut(new_ranks)
+                joined = nodes.join(tw, "node", "left").select(
+                    "node", "_is_src", F.coalesce("_tw", F.lit(0.0)).alias("_tw")
+                )
+                t_total = joined.agg(F.sum("_tw")).collect()[0][0] or 0.0
+                if t_total <= 0.0:
+                    raise ValueError(
+                        "teleport_weights carries no positive weight on any graph "
+                        "node — the personalization vector is undefined"
+                    )
+                tn = joined.select(
+                    "node", "_is_src", (F.col("_tw") / t_total).alias("t")
+                )
             else:
-                new_ranks = new_ranks.persist()
-            # ONE scalar job per iteration: next round's dangling mass via
-            # the carried flag (this also populates new_ranks' cache)
-            dangling = (
-                new_ranks.agg(
-                    F.sum(F.when(~F.col("_is_src"), F.col("rank")))
-                ).collect()[0][0]
-                or 0.0
-            )
-            ranks.unpersist()
-            ranks = new_ranks
-        ranks = ranks.select("node", "rank")
-    else:
-        # initial dangling mass (one scalar job; subsequent iterations fold
-        # it into the delta aggregate — ONE driver round-trip per iteration)
-        dangling = (
-            ranks.join(
-                src_nodes, ranks["node"] == src_nodes["_src_node"], "left_anti"
-            )
-            .agg(F.sum("rank"))
-            .collect()[0][0]
-            or 0.0
-        )
-        for it in range(max_iter):
-            contrib = (
-                e.join(ranks, e["src"] == ranks["node"])
-                .select("dst", (F.col("share") * F.col("rank")).alias("c"))
-                .groupBy("dst")
-                .agg(F.sum("c").alias("contrib"))
-            )
-            # (1-d)·t(v) + d·dangling·t(v) folds to one scalar factor on t —
-            # the dangling redistribution rides the personalization vector
-            tele_scale = (1.0 - damping) + damping * dangling
-            new_ranks = (
-                tnodes.join(contrib, tnodes["node"] == contrib["dst"], "left")
-                .select(
-                    "node",
-                    (
-                        F.lit(tele_scale) * F.col("t")
-                        + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
-                    ).alias("rank"),
+                tn = nodes.select("node", "_is_src", F.lit(1.0 / n).alias("t"))
+            tn = tn.persist()
+            held.append(tn)
+
+            if init_ranks is not None:
+                ir = init_ranks.select(
+                    F.col("node").cast("string").alias("node"),
+                    F.col("rank").cast("double").alias("_ir"),
                 )
-            )
-            if (it + 1) % checkpoint_every == 0 or it == max_iter - 1:
-                new_ranks = cut(new_ranks)
+                r0 = nodes.join(ir, "node", "left").select(
+                    "node", "_is_src", F.coalesce("_ir", F.lit(1.0 / n)).alias("rank")
+                )
+                r_total = r0.agg(F.sum("rank")).collect()[0][0] or 0.0
+                if r_total <= 0.0:
+                    raise ValueError(
+                        "init_ranks carries no positive mass on any graph node — "
+                        "cannot warm-start from it"
+                    )
+                ranks = land(
+                    r0.select("node", "_is_src", (F.col("rank") / r_total).alias("rank"))
+                )
             else:
-                new_ranks = new_ranks.persist()
-            # one aggregate drives BOTH the stop rule (L1 delta vs old ranks)
-            # and the NEXT round's dangling mass (rank parked on non-src
-            # nodes); it is also the job that populates new_ranks' cache
-            row = (
-                new_ranks.join(ranks.withColumnRenamed("rank", "_old"), "node")
-                .join(src_nodes, F.col("node") == src_nodes["_src_node"], "left")
-                .agg(
-                    F.sum(F.abs(F.col("rank") - F.col("_old"))).alias("delta"),
-                    F.sum(
-                        F.when(src_nodes["_src_node"].isNull(), F.col("rank"))
-                    ).alias("dang"),
+                ranks = land(tn.select("node", "_is_src", F.col("t").alias("rank")))
+            # the dangling mass stays a driver scalar: a fully lazy variant
+            # (a broadcast 1-row frame) was measured 2× SLOWER — each landing
+            # job unwinds nested broadcast sub-jobs with per-job AQE overhead
+            dang = F.sum(F.when(~F.col("_is_src"), F.col("rank"))).alias("dang")
+            dangling = ranks.agg(dang).collect()[0][0] or 0.0
+            converged = False
+            delta = None
+            for it in range(max_iter):
+                contrib = (
+                    e.join(ranks, e["src"] == ranks["node"])
+                    .select("dst", (F.col("share") * F.col("rank")).alias("c"))
+                    .groupBy("dst")
+                    .agg(F.sum("c").alias("contrib"))
                 )
-                .collect()[0]
-            )
-            delta = row["delta"]
-            dangling = row["dang"] or 0.0
-            ranks.unpersist()
-            ranks = new_ranks
-            if delta is not None and delta < tol:
-                converged = True
-                break
-    e.unpersist()
-    nodes.unpersist()
-    tnodes.unpersist()
-    src_nodes.unpersist()
-    if tn is not None:
-        tn.unpersist()
-    try:
-        if not converged and on_max_iter == "raise":
-            if tol <= 0.0:
+                # (1-d)·t(v) + d·dangling·t(v) folds to one scalar factor on t —
+                # the dangling redistribution rides the personalization vector
+                tele_scale = (1.0 - damping) + damping * dangling
+                new_ranks = land(
+                    tn.join(contrib, tn["node"] == contrib["dst"], "left").select(
+                        "node",
+                        "_is_src",
+                        (
+                            F.lit(tele_scale) * F.col("t")
+                            + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
+                        ).alias("rank"),
+                    )
+                )
+                # ONE scalar job per iteration: the next round's dangling mass,
+                # plus the L1 delta vs the old ranks only when tol can stop the
+                # loop (fixed-budget mode skips that join as dead work)
+                if tol > 0.0:
+                    row = (
+                        new_ranks.join(
+                            ranks.select("node", F.col("rank").alias("_old")), "node"
+                        )
+                        .agg(
+                            dang,
+                            F.sum(F.abs(F.col("rank") - F.col("_old"))).alias("delta"),
+                        )
+                        .collect()[0]
+                    )
+                    delta = row["delta"]
+                else:
+                    row = new_ranks.agg(dang).collect()[0]
+                dangling = row["dang"] or 0.0
+                ranks = new_ranks
+                if delta is not None and delta < tol:
+                    converged = True
+                    break
+            if not converged and on_max_iter == "raise":
                 raise RuntimeError(
-                    f"pagerank cannot converge with tol {tol!r} ≤ 0 — "
-                    "fixed-budget runs must pass on_max_iter='return'"
+                    f"pagerank did not converge in {max_iter} iterations "
+                    f"(last L1 delta {delta:.3e} ≥ tol {tol:.1e}); raise max_iter "
+                    "or loosen tol"
                 )
-            raise RuntimeError(
-                f"pagerank did not converge in {max_iter} iterations "
-                f"(last L1 delta {delta:.3e} ≥ tol {tol:.1e}); raise max_iter "
-                "or loosen tol"
-            )
-        if materialize == "path":
-            return util.materialize(ranks, mode="path", path=out_path)
-        return util.materialize_local(ranks)
-    finally:
-        ranks.unpersist()
-        if owns_tmp:
-            shutil.rmtree(base, ignore_errors=True)
+            return util.materialize(ranks.select("node", "rank"), materialize, out_path)
+        finally:
+            for df in held:
+                df.unpersist()
 
 
 def hits(
@@ -599,7 +478,6 @@ def hits(
     max_iter: int = 40,
     tol: float = 1e-8,
     weighted: bool = False,
-    checkpoint_every: int = 5,
     materialize: str = "local",
     out_path: str | None = None,
     on_max_iter: str = "raise",
@@ -617,175 +495,127 @@ def hits(
     recovers both norms. Iteration shape mirrors pagerank: edges
     hash-partitioned once and persisted; per iteration two join+sum
     aggregations over the edge list and two scalar collects
-    (norms, L1 delta) — the only driver traffic. Lineage is cut
-    every ``checkpoint_every`` iterations under the same checkpoint
-    contract as :func:`pagerank` (configured checkpoint dir on a
-    cluster, temp dir only on a local master). Nodes never cited have
+    (norms, L1 delta) — the only driver traffic. Each iteration's raw
+    vectors land in parquet through :func:`util.scratch` (the same
+    scratch contract as :func:`pagerank`), so every plan is one
+    iteration deep however many iterations run. Nodes never cited have
     authority 0; nodes citing nothing have hub 0 — both stay in the
     output. Convergence = L1 delta of (hub ⊕ authority) below ``tol``;
     ``on_max_iter="return"`` is the fixed-budget production mode,
     ``"raise"`` (default) the audit mode."""
-    import shutil
-    import tempfile
-    import uuid
-
     spark = edges.sparkSession
     if on_max_iter not in ("raise", "return"):
         raise ValueError(
             f"on_max_iter must be 'raise' or 'return', got {on_max_iter!r}"
         )
-    if materialize not in ("local", "path"):
-        raise ValueError(f"materialize must be 'local' or 'path', got {materialize!r}")
-    if materialize == "path" and not out_path:
-        raise ValueError("materialize='path' requires out_path")
-    sc_ckpt = spark.sparkContext.getCheckpointDir()
-    if sc_ckpt:
-        base = f"{sc_ckpt.rstrip('/')}/logagg-hits-{uuid.uuid4().hex[:8]}"
-        owns_tmp = False
-    elif spark.conf.get("spark.master", "").startswith("local"):
-        base = tempfile.mkdtemp(prefix="logagg-hits-")
-        owns_tmp = True
-    else:
-        raise ValueError(
-            "hits needs spark.sparkContext.setCheckpointDir (executor-"
-            "reachable storage) on a non-local master — the default "
-            "checkpoint location is a driver-local temp dir"
-        )
-
-    n_cuts = [0]
-
-    def cut(df: DataFrame) -> DataFrame:
-        path = f"{base}/iter_{n_cuts[0]}"
-        n_cuts[0] += 1
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-
-    w = F.col("n_links").cast("double") if weighted else F.lit(1.0)
-    e = (
-        edges.select(
-            F.col("src").cast("string"),
-            F.col("dst").cast("string"),
-            w.alias("w"),
-        )
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .repartition("src")
-        .persist()
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()
-    if n == 0:
-        e.unpersist()
-        nodes.unpersist()
-        empty = spark.createDataFrame(
-            [], "node string, hub double, authority double"
-        )
-        if owns_tmp:
-            shutil.rmtree(base, ignore_errors=True)
-        if materialize == "path":
-            return util.materialize(empty, mode="path", path=out_path)
-        return empty
-
-    init = 1.0 / math.sqrt(n)
-    state = cut(
-        nodes.select(
-            "node", F.lit(init).alias("hub"), F.lit(init).alias("authority")
-        )
-    )
-    converged = False
-    delta = None
-    for it in range(max_iter):
-        # L2 normalization commutes through the linear updates
-        # (normalize(A·normalize(v)) == normalize(A·v)), so one pass
-        # computes BOTH raw vectors — a_raw from the old hubs, h_raw from
-        # a_raw — and a single aggregate recovers both norms: two driver
-        # round-trips per iteration total (norms+delta), not four
-        a_raw = (
-            e.join(
-                state.select(F.col("node").alias("src"), "hub"), "src"
+    util.check_materialize(materialize, out_path)
+    with util.scratch(spark, "logagg-hits") as land:
+        w = F.col("n_links").cast("double") if weighted else F.lit(1.0)
+        e = (
+            edges.select(
+                F.col("src").cast("string"),
+                F.col("dst").cast("string"),
+                w.alias("w"),
             )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("w") * F.col("hub")).alias("_a"))
-        )
-        h_raw = (
-            e.join(a_raw.withColumnRenamed("node", "dst"), "dst")
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum(F.col("w") * F.col("_a")).alias("_h"))
-        )
-        raw = (
-            nodes.join(a_raw, "node", "left")
-            .join(h_raw, "node", "left")
-            .select(
-                "node",
-                F.coalesce("_h", F.lit(0.0)).alias("_h"),
-                F.coalesce("_a", F.lit(0.0)).alias("_a"),
-            )
+            .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+            .repartition("src")
             .persist()
         )
-        norms = raw.agg(
-            F.sqrt(F.sum(F.col("_h") ** 2)).alias("hn"),
-            F.sqrt(F.sum(F.col("_a") ** 2)).alias("an"),
-        ).collect()[0]
-        h_norm, a_norm = norms["hn"] or 0.0, norms["an"] or 0.0
-        if a_norm == 0.0:
-            # all edge weights zero: the state is already stationary
-            raw.unpersist()
-            converged = True
-            break
-        new_state = raw.select(
-            "node",
-            (F.col("_h") / (h_norm if h_norm > 0.0 else 1.0)).alias("hub"),
-            (F.col("_a") / a_norm).alias("authority"),
+        nodes = (
+            e.select(F.col("src").alias("node"))
+            .union(e.select(F.col("dst").alias("node")))
+            .distinct()
+            .persist()
         )
-        if (it + 1) % checkpoint_every == 0 or it == max_iter - 1:
-            new_state = cut(new_state)
-        else:
-            new_state = new_state.persist()
-        # L1 delta across both vectors — the stop rule; this job also
-        # populates new_state's cache
-        delta = (
-            new_state.join(
-                state.select(
-                    "node",
-                    F.col("hub").alias("_oh"),
-                    F.col("authority").alias("_oa"),
-                ),
-                "node",
-            )
-            .agg(
-                F.sum(
-                    F.abs(F.col("hub") - F.col("_oh"))
-                    + F.abs(F.col("authority") - F.col("_oa"))
+        try:
+            n = nodes.count()
+            if n == 0:
+                empty = spark.createDataFrame(
+                    [], "node string, hub double, authority double"
+                )
+                return util.materialize(empty, materialize, out_path)
+
+            init = 1.0 / math.sqrt(n)
+            state = land(
+                nodes.select(
+                    "node", F.lit(init).alias("hub"), F.lit(init).alias("authority")
                 )
             )
-            .collect()[0][0]
-        )
-        raw.unpersist()
-        state.unpersist()
-        state = new_state
-        if delta is not None and delta < tol:
-            converged = True
-            break
-    e.unpersist()
-    nodes.unpersist()
-    try:
-        if not converged and on_max_iter == "raise":
-            raise RuntimeError(
-                f"hits did not converge in {max_iter} iterations "
-                f"(last L1 delta {delta!r} ≥ tol {tol:.1e}); raise max_iter "
-                "or loosen tol"
-            )
-        if materialize == "path":
-            return util.materialize(state, mode="path", path=out_path)
-        return util.materialize_local(state)
-    finally:
-        state.unpersist()
-        if owns_tmp:
-            shutil.rmtree(base, ignore_errors=True)
+            converged = False
+            delta = None
+            for it in range(max_iter):
+                # L2 normalization commutes through the linear updates
+                # (normalize(A·normalize(v)) == normalize(A·v)), so one pass
+                # computes BOTH raw vectors — a_raw from the old hubs, h_raw
+                # from a_raw — and a single aggregate recovers both norms: two
+                # driver round-trips per iteration total (norms+delta), not four
+                a_raw = (
+                    e.join(
+                        state.select(F.col("node").alias("src"), "hub"), "src"
+                    )
+                    .groupBy(F.col("dst").alias("node"))
+                    .agg(F.sum(F.col("w") * F.col("hub")).alias("_a"))
+                )
+                h_raw = (
+                    e.join(a_raw.withColumnRenamed("node", "dst"), "dst")
+                    .groupBy(F.col("src").alias("node"))
+                    .agg(F.sum(F.col("w") * F.col("_a")).alias("_h"))
+                )
+                raw = land(
+                    nodes.join(a_raw, "node", "left")
+                    .join(h_raw, "node", "left")
+                    .select(
+                        "node",
+                        F.coalesce("_h", F.lit(0.0)).alias("_h"),
+                        F.coalesce("_a", F.lit(0.0)).alias("_a"),
+                    )
+                )
+                norms = raw.agg(
+                    F.sqrt(F.sum(F.col("_h") ** 2)).alias("hn"),
+                    F.sqrt(F.sum(F.col("_a") ** 2)).alias("an"),
+                ).collect()[0]
+                h_norm, a_norm = norms["hn"] or 0.0, norms["an"] or 0.0
+                if a_norm == 0.0:
+                    # all edge weights zero: the state is already stationary
+                    converged = True
+                    break
+                new_state = raw.select(
+                    "node",
+                    (F.col("_h") / (h_norm if h_norm > 0.0 else 1.0)).alias("hub"),
+                    (F.col("_a") / a_norm).alias("authority"),
+                )
+                # L1 delta across both vectors — the stop rule
+                delta = (
+                    new_state.join(
+                        state.select(
+                            "node",
+                            F.col("hub").alias("_oh"),
+                            F.col("authority").alias("_oa"),
+                        ),
+                        "node",
+                    )
+                    .agg(
+                        F.sum(
+                            F.abs(F.col("hub") - F.col("_oh"))
+                            + F.abs(F.col("authority") - F.col("_oa"))
+                        )
+                    )
+                    .collect()[0][0]
+                )
+                state = new_state
+                if delta is not None and delta < tol:
+                    converged = True
+                    break
+            if not converged and on_max_iter == "raise":
+                raise RuntimeError(
+                    f"hits did not converge in {max_iter} iterations "
+                    f"(last L1 delta {delta!r} ≥ tol {tol:.1e}); raise max_iter "
+                    "or loosen tol"
+                )
+            return util.materialize(state, materialize, out_path)
+        finally:
+            e.unpersist()
+            nodes.unpersist()
 
 
 def hits_py(
@@ -1174,12 +1004,7 @@ def cocitation(
     materialization (the path-mode sink never lands them).
     ``materialize="path"`` for corpus-scale pair lists (same contract as
     the dedup pair ops)."""
-    if materialize not in ("local", "path"):
-        raise ValueError(
-            f"materialize must be 'local' or 'path', got {materialize!r}"
-        )
-    if materialize == "path" and not out_path:
-        raise ValueError("materialize='path' requires out_path")
+    util.check_materialize(materialize, out_path)
     e = (
         edges.select(
             F.col("src").cast("string").alias("src"),

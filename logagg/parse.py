@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from logagg.schemas import HOST_RE, LOGTYPE_RE, NODE_RE, PARSED_DDL
+from logagg.schemas import HOST_RE, LOGTYPE_RE, NODE_RE, PARSED_DDL, PARSED_FIELDS
 from logagg.refparse import FIELD_NAMES, RECORD_JOINER, SEVERITY_PREFIXES, TS_FORMAT
 
 _N_FIELDS = len(FIELD_NAMES)
@@ -206,15 +206,6 @@ def _decode_html_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFra
         yield _parse_batch(out)
 
 
-# output field → DDL type, in canonical order (mirrors schemas.PARSED_DDL)
-_PARSED_FIELDS: dict[str, str] = {
-    "url": "string", "lang": "string", "warc_ts": "timestamp",
-    "record_idx": "int", "extracted_text": "string", "severity": "string",
-    "jvm": "string", "datetime": "timestamp", "source": "string",
-    "type": "string", "message": "string",
-}
-
-
 def parse_pages(pages: DataFrame, source: str = "text", columns: list[str] | None = None) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → parsed records.
 
@@ -232,13 +223,13 @@ def parse_pages(pages: DataFrame, source: str = "text", columns: list[str] | Non
     (which rows parse/drop) are unaffected.
     """
     if columns is None:
-        cols = list(_PARSED_FIELDS)
+        cols = list(PARSED_FIELDS)
     else:
-        bad = set(columns) - set(_PARSED_FIELDS)
+        bad = set(columns) - set(PARSED_FIELDS)
         if bad:
             raise KeyError(f"unknown parsed columns: {sorted(bad)}")
-        cols = [c for c in _PARSED_FIELDS if c in set(columns)]  # canonical order
-    ddl = ", ".join(f"{c} {_PARSED_FIELDS[c]}" for c in cols)
+        cols = [c for c in PARSED_FIELDS if c in set(columns)]  # canonical order
+    ddl = ", ".join(f"{c} {PARSED_FIELDS[c]}" for c in cols)
     if source == "html":
         if columns is not None:
             raise ValueError("columns pruning is text-path only (html path is the byte-identity check)")

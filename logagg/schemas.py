@@ -22,28 +22,23 @@ PAGES_SCHEMA = T.StructType(
     ]
 )
 
-# Output of the vectorized parse stage (before JVM-side enrichment).
-PARSED_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("warc_ts", T.TimestampType(), True),
-        T.StructField("record_idx", T.IntegerType(), False),
-        T.StructField("extracted_text", T.StringType(), False),
-        T.StructField("severity", T.StringType(), False),
-        T.StructField("jvm", T.StringType(), True),
-        T.StructField("datetime", T.TimestampType(), False),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("type", T.StringType(), True),
-        T.StructField("message", T.StringType(), False),
-    ]
-)
+# Output of the vectorized parse stage (before JVM-side enrichment):
+# field → DDL type, in canonical column order.
+PARSED_FIELDS: dict[str, str] = {
+    "url": "string",
+    "lang": "string",
+    "warc_ts": "timestamp",
+    "record_idx": "int",
+    "extracted_text": "string",
+    "severity": "string",
+    "jvm": "string",
+    "datetime": "timestamp",
+    "source": "string",
+    "type": "string",
+    "message": "string",
+}
 
-PARSED_DDL = (
-    "url string, lang string, warc_ts timestamp, record_idx int, "
-    "extracted_text string, severity string, jvm string, datetime timestamp, "
-    "source string, type string, message string"
-)
+PARSED_DDL = ", ".join(f"{c} {t}" for c, t in PARSED_FIELDS.items())
 
 # URL layout: https://{host}/{node}/{log_type}/{page_id}
 # Analog of the reference's filename→node/log_type regex extraction

@@ -32,25 +32,23 @@ def default_driver_memory() -> str:
 def get_spark(
     app_name: str = "logagg",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the session.
 
-    ``master`` defaults to ``local[N]``, N = :func:`default_cpus`.
-    ``shuffle_partitions`` defaults to the local core count — the single most
-    important local-mode knob (200 default over-parallelizes small inputs and
-    under-parallelizes huge ones).
+    ``master`` defaults to ``local[N]``, N = :func:`default_cpus`. Shuffle
+    partitions match the parallelism of a ``local[N]`` master, else the
+    local core count — the single most important local-mode knob (200
+    default over-parallelizes small inputs and under-parallelizes huge
+    ones); a cluster overrides it with ``--conf`` at spark-submit time.
     """
     cpus = default_cpus()
     if master is None:
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        # match parallelism implied by the master URL when it is local[N]
-        if master.startswith("local[") and master[6:-1].isdigit():
-            shuffle_partitions = int(master[6:-1])
-        else:
-            shuffle_partitions = cpus
+    if master.startswith("local[") and master[6:-1].isdigit():
+        shuffle_partitions = int(master[6:-1])
+    else:
+        shuffle_partitions = cpus
 
     builder = (
         SparkSession.builder.master(master)

@@ -11,7 +11,7 @@ SF_SMOKE = "/root/testdata/sf0.001"
 def spark():
     from logagg.session import get_spark
 
-    s = get_spark(app_name="logagg-tests", master="local[4]", shuffle_partitions=4)
+    s = get_spark(app_name="logagg-tests", master="local[4]")
     yield s
 
 

@@ -248,14 +248,14 @@ def test_pagerank_checkpoints_stay_in_base_dir(spark, toy_edges, monkeypatch, tm
     """Regression: the per-iteration teleport scalar once shadowed the
     checkpoint-dir variable, so every cut after iteration 0 wrote to a
     float-named directory in the CWD (and the real temp dir leaked).
-    checkpoint_every=1 forces a cut per iteration; the CWD must stay clean
-    and the temp base must be removed on return."""
+    pagerank cuts every iteration; the CWD must stay clean and the temp
+    base must be removed on return."""
     import os
 
     monkeypatch.chdir(tmp_path)
     before = set(os.listdir(tmp_path))
     tmp_before = set(os.listdir("/tmp"))
-    linkgraph.pagerank(toy_edges, tol=1e-8, checkpoint_every=1).collect()
+    linkgraph.pagerank(toy_edges, tol=1e-8).collect()
     assert set(os.listdir(tmp_path)) == before
     leaked = {
         d for d in set(os.listdir("/tmp")) - tmp_before if d.startswith("logagg-pr-")

@@ -10,7 +10,7 @@ by rigging util.materialize_local to raise and running the whole family in
 
 import pytest
 
-from logagg import dedup, util
+from logagg import dedup, linkgraph, util
 
 
 def _pages(spark, pages_cache):
@@ -134,9 +134,19 @@ def test_materialize_mode_validation(spark):
         util.materialize(df, "lazy")  # documented non-mode
 
 
-def test_dup_clusters_refuses_default_checkpoint_on_nonlocal_master():
+@pytest.mark.parametrize(
+    "run",
+    [
+        lambda df: dedup.dup_clusters(df, pairs=object()),
+        lambda df: linkgraph.pagerank(df),
+        lambda df: linkgraph.hits(df),
+    ],
+    ids=["dup_clusters", "pagerank", "hits"],
+)
+def test_iterative_ops_refuse_default_checkpoint_on_nonlocal_master(run):
     """A driver-local mkdtemp default is invisible to remote executors —
-    must raise, not silently read empty state (ADVICE r3)."""
+    every fixpoint operator must raise, not silently read empty state, and
+    must do so before touching Spark (the fake session has no other API)."""
 
     class _Conf:
         @staticmethod
@@ -156,7 +166,7 @@ def test_dup_clusters_refuses_default_checkpoint_on_nonlocal_master():
         sparkSession = _Spark()
 
     with pytest.raises(ValueError, match="checkpoint_dir"):
-        dedup.dup_clusters(_DF(), pairs=object())
+        run(_DF())
 
 
 def test_derived_path_mirrors_nonlocal_guard():

@@ -47,9 +47,7 @@ def main() -> None:
     from logagg.session import get_spark
 
     synth.ensure_cache(SF_DIR, expected=False)
-    spark = get_spark(
-        app_name=f"plans-r06-{suffix}", master="local[8]", shuffle_partitions=8
-    )
+    spark = get_spark(app_name=f"plans-r06-{suffix}", master="local[8]")
     PLANS.mkdir(parents=True, exist_ok=True)
     out: dict[str, str] = {}
 

@@ -552,7 +552,7 @@ def main(only: list[str]) -> int:
     import __spark_entry__ as entrymod
     from logagg.session import get_spark
 
-    spark = get_spark(app_name="plans", master="local[4]", shuffle_partitions=4)
+    spark = get_spark(app_name="plans", master="local[4]")
     qs = entrymod.queries()
     names = only or list(CHECKS)
     rc = 0

@@ -28,8 +28,7 @@ def main() -> None:
     from logagg import linkgraph as lg
 
     synth.ensure_cache(SF_DIR, expected=False)
-    spark = get_spark(app_name="probe-r06", master=f"local[{CPUS}]",
-                      shuffle_partitions=CPUS)
+    spark = get_spark(app_name="probe-r06", master=f"local[{CPUS}]")
     out = {}
 
     which = sys.argv[1:] or ["bm25", "links"]

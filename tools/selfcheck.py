@@ -67,7 +67,7 @@ def main(only: list[str]) -> int:
     import __spark_entry__ as entrymod
     from logagg.session import get_spark
 
-    spark = get_spark(app_name="selfcheck", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(app_name="selfcheck", master="local[8]")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
