@@ -108,7 +108,10 @@ def compact_parquet_dir(
     above). Row set is IDENTICAL before and after (pinned by test).
     Returns ``{files_before, files_after, bytes}``. Readers caching
     plans over ``path`` must re-read after the swap (Spark's CacheManager
-    recache-by-path applies — the repo's standard lineage-cut rule)."""
+    recache-by-path applies — the repo's standard lineage-cut rule).
+    ``_``-prefixed sidecars of ``path`` (a stream sink's ``_batch_ledger``)
+    survive the swap, so a replay after compaction still skips committed
+    batches."""
     import os
     import shutil
 
@@ -137,6 +140,11 @@ def compact_parquet_dir(
         w = live.repartition(n_parts).write.mode("overwrite")
     w.parquet(tmp)
     dest = path.rstrip("/")
+    # the rewrite read skips ``_*`` entries, so sidecars such as a stream
+    # sink's ``_batch_ledger`` would die with ``dest``: carry them across
+    for name in os.listdir(dest):
+        if name.startswith("_") and not os.path.exists(os.path.join(tmp, name)):
+            os.rename(os.path.join(dest, name), os.path.join(tmp, name))
     shutil.rmtree(dest)
     os.rename(tmp, dest)
     after, _ = _stats()

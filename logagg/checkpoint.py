@@ -47,6 +47,10 @@ class StageLedger:
             return None  # input changed → stage must rerun
         return meta
 
+    def invalidate(self, stage: str) -> None:
+        """Drop the stage's marker, so the next run reruns the stage."""
+        self._marker(stage).unlink(missing_ok=True)
+
     def record(self, stage: str, fingerprint: str, metrics: dict[str, Any]) -> dict:
         meta = {
             "stage": stage,
@@ -72,7 +76,8 @@ class StageLedger:
         checkpoint. Sinks are written before the marker — a crash between
         the two reruns the stage, so an overwrite-mode sink makes the retry
         idempotent (no double-append) and an append-mode sink is
-        at-least-once across that window.
+        at-least-once across that window, unless the caller first deletes
+        the files no marker lists (the batch pipeline's guard does).
         """
         existing = self.completed(stage, fingerprint)
         if existing is not None:
@@ -91,7 +96,9 @@ class StageLedger:
         ``n_buckets`` independently-checkpointed sub-stages (one marker —
         and one idempotent sink partition — per bucket), so a crash loses
         only the in-flight bucket, not the whole stage. Markers double as
-        per-partition lineage: each records its bucket's metrics.
+        per-partition lineage: each records its bucket's metrics. The
+        rollup carries each bucket's scalar metrics only; collections (a
+        file manifest, per-sink counts) stay in the bucket's own marker.
 
         Returns (rollup marker, number of buckets actually executed)."""
         ran = 0
@@ -108,7 +115,11 @@ class StageLedger:
             "n_buckets": n_buckets,
             "rows": sum(m.get("rows", 0) for m in bucket_metrics),
             "buckets": [
-                {k: v for k, v in m.items() if k not in ("fingerprint",)}
+                {
+                    k: v
+                    for k, v in m.items()
+                    if k != "fingerprint" and not isinstance(v, (dict, list))
+                }
                 for m in bucket_metrics
             ],
         }

@@ -5,17 +5,21 @@ The Spark-first restatement of the reference's main() lifecycle
 SURVEY.md §3.1), with the directory-tree routing become a partitioned table
 layout and the insert metrics become stage markers (logagg.checkpoint).
 
-Every stage writes with mode("overwrite") to its own table path, so a retry
-after a crash-before-marker is idempotent.
+The parse buckets append to the routed table, and a guard run before them
+removes whatever no committed bucket lists, so a retry after a
+crash-before-marker is idempotent. The aggregate stage writes with
+mode("overwrite") to its own table path.
 """
 
 from __future__ import annotations
 
 import json
+import os
+import shutil
+from collections import Counter
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 from logagg import aggregate, enrich, parse, route, synth
 from logagg.checkpoint import StageLedger
@@ -23,6 +27,37 @@ from logagg.checkpoint import StageLedger
 
 def _fingerprint(*parts: object) -> str:
     return json.dumps(parts, default=str)
+
+
+def _keep_committed(ledger: StageLedger, fp: str, bucket_stages: list[str], out: Path) -> None:
+    """Pre-run guard: ``routed/`` holds exactly the files listed by valid
+    bucket markers. A marker is valid if its fingerprint matches and every
+    file it lists exists with the recorded size; an invalid one is dropped,
+    so its bucket reruns. Every other data file under ``routed/`` goes, with
+    its ``.crc`` companion, and so do a crashed write's ``_temporary`` dir
+    and the ``parsed/`` staging dir of the older two-copy layout. One rule
+    for a crash mid-bucket, an invalidated marker, a wider stale layout and
+    an outdir of the older layout."""
+    routed = out / "routed"
+    files = route.data_files(routed)
+    keep: set[str] = set()
+    for stage in bucket_stages:
+        meta = ledger.completed(stage, fp)
+        if meta is None:
+            continue
+        if all(files.get(rel) == n for rel, n in meta["manifest"].items()):
+            keep.update(meta["manifest"])
+        else:
+            ledger.invalidate(stage)
+    for rel in set(files) - keep:
+        p = routed / rel
+        p.unlink()
+        p.with_name(f".{p.name}.crc").unlink(missing_ok=True)
+    shutil.rmtree(routed / "_temporary", ignore_errors=True)
+    shutil.rmtree(out / "parsed", ignore_errors=True)
+    for root, _, _ in os.walk(routed, topdown=False):
+        if root != str(routed) and not os.listdir(root):
+            os.rmdir(root)  # a partition dir emptied above
 
 
 def run_pipeline(spark: SparkSession, sf_dir: str, outdir: str) -> dict:
@@ -34,13 +69,15 @@ def run_pipeline(spark: SparkSession, sf_dir: str, outdir: str) -> dict:
 
     results: dict[str, dict] = {}
 
-    # stage 1: parse + enrich → staged records table. MID-STAGE resumable:
-    # the input file list is split into buckets, each an independently-
-    # checkpointed sub-stage writing its own sink partition (bucket=<b>/),
-    # so a crash mid-parse loses only the in-flight bucket. The per-bucket
-    # markers are the per-partition lineage record (north-star contract;
-    # on Iceberg the same metadata rides on snapshot properties).
-    parsed_path = str(out / "parsed")
+    # stage 1: parse + enrich + route, one job per bucket. MID-STAGE
+    # resumable: the input file list is split into buckets, each an
+    # independently-checkpointed sub-stage that appends its records straight
+    # into the routed table, so every record is written once and a crash
+    # mid-parse loses only the in-flight bucket. Each bucket marker lists the
+    # files its write committed, {relpath: bytes}, next to its per-sink
+    # counts: it is the per-partition lineage record (north-star contract;
+    # on Iceberg the same metadata is a snapshot's data-file list).
+    routed_path = out / "routed"
     part_files = sorted(str(p) for p in Path(pages_path).glob("*.parquet"))
     n_buckets = min(8, max(1, len(part_files)))
     file_buckets = [part_files[b::n_buckets] for b in range(n_buckets)]
@@ -48,40 +85,31 @@ def run_pipeline(spark: SparkSession, sf_dir: str, outdir: str) -> dict:
     # the lineage fingerprint: a renamed/replaced file with the same count
     # would otherwise silently remap files to buckets without invalidating
     # the per-bucket markers
-    fp = _fingerprint("v3", pages_path, synth.GEN_VERSION, part_files)
-
-    # a rerun with fewer buckets (input shrank) overwrites only bucket dirs
-    # < n_buckets; stale bucket=<b>/ dirs from a wider previous layout would
-    # silently feed duplicate rows to stage 2 — drop them before running
-    import shutil
-
-    for stale in Path(parsed_path).glob("bucket=*"):
-        try:
-            b = int(stale.name.split("=", 1)[1])
-        except ValueError:
-            continue
-        if b >= n_buckets:
-            shutil.rmtree(stale, ignore_errors=True)
+    fp = _fingerprint("v4", pages_path, synth.GEN_VERSION, part_files)
+    bucket_stages = [f"parse.b{b:03d}" for b in range(n_buckets)]
+    _keep_committed(ledger, fp, bucket_stages, out)
 
     def _parse_bucket(b: int) -> dict:
         pages = spark.read.parquet(*file_buckets[b])
         host_geo, lang_locale = enrich.load_lookups(spark, cache)
         parsed = enrich.enrich(parse.parsed_records(pages), host_geo, lang_locale)
-        sink = str(Path(parsed_path) / f"bucket={b}")
-        parsed.write.mode("overwrite").parquet(sink)
-        n = spark.read.parquet(sink).count()
-        return {"rows": n, "n_files": len(file_buckets[b]), "sink": sink}
+        sinks, manifest = route.multiplex_write(parsed, str(routed_path))
+        return {
+            "rows": sum(sinks.values()),
+            "n_files": len(file_buckets[b]),
+            "sinks": sinks,
+            "manifest": manifest,
+        }
 
     results["parse"], _ = ledger.run_stage_buckets("parse", fp, n_buckets, _parse_bucket)
 
-    # stage 2: route → multiplexed fan-out write, per-sink counts as lineage
-    routed_path = str(out / "routed")
-
+    # stage 2: route → the rollup of the buckets' per-sink counts (the
+    # fan-out write itself ran inside each bucket); no Spark job
     def _route_stage() -> dict:
-        # drop the resume-bucket partition column — stage-internal layout
-        parsed = spark.read.parquet(parsed_path).drop("bucket")
-        counts = route.multiplex_write(parsed, routed_path)
-        return {"rows": sum(counts.values()), "sinks": counts, "sink": routed_path}
+        sinks: Counter = Counter()
+        for stage in bucket_stages:
+            sinks.update(ledger.completed(stage, fp)["sinks"])
+        return {"rows": sum(sinks.values()), "sinks": dict(sinks), "sink": str(routed_path)}
 
     results["route"], _ = ledger.run_stage("route", fp, _route_stage)
 
@@ -89,7 +117,7 @@ def run_pipeline(spark: SparkSession, sf_dir: str, outdir: str) -> dict:
     agg_path = str(out / "aggregates")
 
     def _agg_stage() -> dict:
-        routed = spark.read.parquet(routed_path)
+        routed = spark.read.parquet(str(routed_path))
         aggregate.sink_agg_hourly(routed).write.mode("overwrite").parquet(
             str(Path(agg_path) / "hourly")
         )

@@ -125,7 +125,8 @@ def run_streaming_route_multiplex(
     with the batch writer is pytest-pinned).
 
     ``foreachBatch`` is the right shape here: the partitioned write fans a
-    micro-batch out to all N sinks in ONE pass, and the sink-side append is
+    micro-batch out to all N sinks in ONE job (per-sink counts come from the
+    footers of the files it committed), and the sink-side append is
     keyed by batch_id through the commit ledger (:class:`logagg.checkpoint.
     StageLedger` on ``<outdir>/_batch_ledger/``, one ``batch-<id>.json``
     marker ``{"rows", "sinks"}`` per micro-batch): a batch whose marker
@@ -144,7 +145,7 @@ def run_streaming_route_multiplex(
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         def _append() -> dict:
-            sinks = route.multiplex_write(batch_df, outdir, mode="append")
+            sinks, _ = route.multiplex_write(batch_df, outdir)
             return {"rows": sum(sinks.values()), "sinks": sinks}
 
         marker, _ = ledger.run_stage(f"batch-{batch_id}", "route", _append)

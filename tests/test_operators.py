@@ -51,6 +51,31 @@ def test_route_counts_conserve_total(spark, pages_cache):
     assert all("/" in r["route"] for r in counts)
 
 
+def test_multiplex_write_counts_its_own_files(spark, tmp_path):
+    """Two appends into one dir: each returns exactly ``route_counts`` of its
+    own input, read from the footers of the files that append committed,
+    and the two manifests are disjoint. The node values cover the partition
+    path encodings: ``""`` lands as ``__HIVE_DEFAULT_PARTITION__``, ``a:b``
+    as ``a%3Ab``, and ``007`` must stay a string."""
+    out = tmp_path / "routed"
+    schema = "node string, log_type string, message string"
+    batches = [
+        [("", "access", "m1"), ("a:b", "error", "m2"), ("007", "access", "m3"), ("007", "access", "m4")],
+        [("007", "error", "m5"), ("", "error", "m6"), ("a:b", "error", "m7")],
+    ]
+    manifests = []
+    for rows in batches:
+        df = spark.createDataFrame(rows, schema)
+        sinks, manifest = route.multiplex_write(df, str(out))
+        assert sinks == {r["route"]: r["n"] for r in route.route_counts(df).collect()}
+        assert manifest
+        assert all((out / rel).stat().st_size == n for rel, n in manifest.items())
+        manifests.append(manifest)
+    assert sinks == {"007/error": 1, "/error": 1, "a:b/error": 1}
+    assert not set(manifests[0]) & set(manifests[1])
+    assert spark.read.parquet(str(out)).count() == sum(map(len, batches))
+
+
 def test_exact_dupes_finds_injected_copies(spark, pages_cache):
     pages = spark.read.parquet(str(pages_cache / "pages.parquet"))
     groups = dedup.exact_dupes(pages, id_col="url", text_col="text").collect()

@@ -88,15 +88,14 @@ def test_pipeline_resumes_mid_stage(spark, tmp_path):
     """Crash MID-parse model: one bucket's marker+sink lost → only that
     bucket re-executes; the others keep their identical markers (per-
     partition lineage, north-star 'resumable mid-stage' contract)."""
-    import shutil
-
     out = tmp_path / "out"
     sf_dir = "/root/testdata/sf0.01"  # 3 part files -> 3 buckets (sf0.001 has 1)
     first = run_pipeline(spark, sf_dir, str(out))
     assert first["parse"]["n_buckets"] > 1
     victim = out / "_meta" / "parse.b001.json"
+    for rel in json.loads(victim.read_text())["manifest"]:
+        (out / "routed" / rel).unlink()
     victim.unlink()
-    shutil.rmtree(out / "parsed" / "bucket=1")
     (out / "_meta" / "parse.json").unlink()  # rollup is re-derived
     # downstream stages read the healed parse output → must also rerun
     (out / "_meta" / "route.json").unlink()
@@ -118,19 +117,17 @@ def test_pipeline_resumes_mid_stage(spark, tmp_path):
 
 
 def test_pipeline_drops_stale_bucket_dirs(spark, tmp_path):
-    """A rerun whose bucket layout shrank must not let old bucket=<b>/ dirs
-    (b >= n_buckets) survive into stage 2's scan — that silently feeds
-    duplicate/stale rows downstream (ADVICE r2)."""
+    """A rerun whose bucket layout shrank must not let the files of old
+    buckets (b >= n_buckets) survive in the routed table — that silently
+    feeds duplicate/stale rows downstream (ADVICE r2)."""
     out = tmp_path / "out"
     run_pipeline(spark, SF_SMOKE, str(out))
-    parsed = out / "parsed"
-    n_real = len(list(parsed.glob("bucket=*")))
-    # forge a stale dir from a hypothetical wider previous layout, with a
-    # parquet file stage 2 would otherwise pick up
-    stale = parsed / f"bucket={n_real + 3}"
-    src = next((parsed / "bucket=0").glob("*.parquet"))
-    stale.mkdir()
-    (stale / src.name).write_bytes(src.read_bytes())
+    routed = out / "routed"
+    # forge a file a hypothetical wider previous layout left behind in one
+    # partition dir, which readers of the routed table would pick up
+    src = next(routed.rglob("*.parquet"))
+    stale = src.with_name("part-99999-stale-bucket.c000.snappy.parquet")
+    stale.write_bytes(src.read_bytes())
     # invalidate ALL markers so every stage actually reruns — with only the
     # parse markers gone, route would be replayed from its old marker and
     # the downstream row-count assert below would be vacuous
@@ -192,3 +189,72 @@ def test_routed_layout_prunes_partitions(spark, tmp_path):
     assert files and all("node=n05" in f for f in files)
     direct = spark.read.parquet(str(out / "routed" / "node=n05")).count()
     assert picked.count() == direct > 0
+
+
+def _oracle_rows() -> int:
+    import pyarrow.parquet as pq
+
+    from logagg import synth
+
+    return pq.read_metadata(synth.ensure_cache(SF_SMOKE) / "expected_parsed.parquet").num_rows
+
+
+def test_pipeline_guard_drops_unlisted_routed_file(spark, tmp_path):
+    """A data file that no bucket marker lists (a crashed write's leftover)
+    is deleted before the rerun, with its now-empty partition dirs, so the
+    routed table again holds exactly the committed rows."""
+    out = tmp_path / "out"
+    run_pipeline(spark, SF_SMOKE, str(out))
+    src = next((out / "routed").rglob("*.parquet"))
+    stray_dir = out / "routed" / "node=X" / "log_type=Y"
+    stray_dir.mkdir(parents=True)
+    stray = stray_dir / src.name
+    stray.write_bytes(src.read_bytes())
+    results = run_pipeline(spark, SF_SMOKE, str(out))
+    assert not stray.exists() and not (out / "routed" / "node=X").exists()
+    assert results["route"]["rows"] == _oracle_rows()
+    assert spark.read.parquet(str(out / "routed")).count() == _oracle_rows()
+
+
+def test_pipeline_guard_reruns_bucket_of_truncated_file(spark, tmp_path):
+    """A listed file whose size no longer matches its marker invalidates
+    that one bucket: it reruns, the other buckets keep their markers."""
+    out = tmp_path / "out"
+    sf_dir = "/root/testdata/sf0.01"  # 3 part files -> 3 buckets
+    first = run_pipeline(spark, sf_dir, str(out))
+    meta = out / "_meta"
+    victim = meta / "parse.b001.json"
+    rel = next(iter(json.loads(victim.read_text())["manifest"]))
+    with open(out / "routed" / rel, "r+b") as f:
+        f.truncate(16)
+    before = {p.name: json.loads(p.read_text())["completed_at"] for p in meta.glob("parse.b*.json")}
+    second = run_pipeline(spark, sf_dir, str(out))
+    after = {p.name: json.loads(p.read_text())["completed_at"] for p in meta.glob("parse.b*.json")}
+    assert {k for k in before if before[k] != after[k]} == {victim.name}
+    assert second["parse"]["rows"] == first["parse"]["rows"]
+    assert spark.read.parquet(str(out / "routed")).count() == first["route"]["rows"]
+
+
+def test_pipeline_upgrades_staged_layout(spark, tmp_path):
+    """An outdir of the older two-copy layout (a ``parsed/`` staging dir,
+    v3 markers, a routed table no v4 marker lists) reruns from scratch to
+    the oracle counts and keeps no ``parsed/``."""
+    from logagg import parse, route, synth
+
+    out = tmp_path / "out"
+    run_pipeline(spark, SF_SMOKE, str(out))
+    src = next((out / "routed").rglob("*.parquet"))
+    (out / "parsed" / "bucket=0").mkdir(parents=True)
+    (out / "parsed" / "bucket=0" / src.name).write_bytes(src.read_bytes())
+    for p in (out / "_meta").glob("*.json"):
+        m = json.loads(p.read_text())
+        m["fingerprint"] = m["fingerprint"].replace('"v4"', '"v3"', 1)
+        m.pop("manifest", None)
+        p.write_text(json.dumps(m))
+    results = run_pipeline(spark, SF_SMOKE, str(out))
+    assert not (out / "parsed").exists()
+    assert results["parse"]["rows"] == results["route"]["rows"] == _oracle_rows()
+    pages = spark.read.parquet(str(synth.ensure_cache(SF_SMOKE) / "pages.parquet"))
+    want = {r["route"]: r["n"] for r in route.route_counts(parse.parsed_records(pages)).collect()}
+    assert results["route"]["sinks"] == want
+    assert spark.read.parquet(str(out / "routed")).count() == _oracle_rows()

@@ -212,6 +212,30 @@ def test_streaming_route_ledger_one_marker_per_batch(spark, pages_cache, tmp_pat
     assert dict(summed) == counts
 
 
+def test_streaming_route_replay_after_compaction(spark, pages_cache, tmp_path):
+    """Compaction rewrites the sink but must keep its ``_batch_ledger``: a
+    replay after compaction (checkpoint lost) still skips every committed
+    batch — same returned counts, no duplicate rows."""
+    import shutil
+
+    from logagg import catalog
+
+    pages_dir = str(pages_cache / "pages.parquet")
+    sink, ckpt = tmp_path / "routed", tmp_path / "ckpt"
+    counts = streaming.run_streaming_route_multiplex(
+        spark, pages_dir, str(sink), str(ckpt), max_files_per_trigger=1
+    )
+    n_rows = spark.read.parquet(str(sink)).count()
+    catalog.compact_parquet_dir(spark, str(sink), partition_cols=("node", "log_type"))
+    assert list((sink / "_batch_ledger").glob("batch-*.json"))
+    shutil.rmtree(ckpt)
+    replayed = streaming.run_streaming_route_multiplex(
+        spark, pages_dir, str(sink), str(ckpt), max_files_per_trigger=1
+    )
+    assert replayed == counts
+    assert spark.read.parquet(str(sink)).count() == n_rows
+
+
 def test_streaming_heavy_hitters_equals_batch_and_replays(spark, tmp_path):
     """With capacity >= total distinct keys the streamed MG state is exact,
     so it must equal the batch groupBy counts; a full replay (fresh
