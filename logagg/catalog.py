@@ -17,6 +17,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from logagg.util import data_files, swap_dir
+
 
 def iceberg_available(spark: SparkSession) -> bool:
     """True iff the Iceberg Spark runtime is on the classpath."""
@@ -47,8 +49,6 @@ class Catalog:
         if self.iceberg:
             writer = df.writeTo(table)
             if partition_by:
-                from pyspark.sql import functions as F
-
                 writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
             writer.createOrReplace()
             return
@@ -102,50 +102,21 @@ def compact_parquet_dir(
     hive partition columns when given (one file per partition value
     otherwise the global coalesce would destroy partition pruning).
 
-    Same local-fs tmp-dir + rename swap as
-    :func:`logagg.searchidx.compact_index`; on a cluster this job is one
-    Iceberg ``rewrite_data_files`` transaction (the catalog branch
-    above). Row set is IDENTICAL before and after (pinned by test).
-    Returns ``{files_before, files_after, bytes}``. Readers caching
-    plans over ``path`` must re-read after the swap (Spark's CacheManager
-    recache-by-path applies — the repo's standard lineage-cut rule).
-    ``_``-prefixed sidecars of ``path`` (a stream sink's ``_batch_ledger``)
-    survive the swap, so a replay after compaction still skips committed
-    batches."""
-    import os
-    import shutil
-
-    def _stats() -> tuple[int, int]:
-        n = b = 0
-        for root, _, fs in os.walk(path):
-            if "__compact" in root:
-                continue
-            for f in fs:
-                if f.endswith(".parquet"):
-                    n += 1
-                    b += os.path.getsize(os.path.join(root, f))
-        return n, b
-
-    before, nbytes = _stats()
-    live = spark.read.parquet(path)
-    tmp = f"{path.rstrip('/')}__compact"
-    n_parts = max(1, -(-nbytes // (target_mb * 1024 * 1024)))
-    if partition_cols:
-        w = (
-            live.repartition(*[F.col(c) for c in partition_cols])
-            .write.mode("overwrite")
-            .partitionBy(*partition_cols)
-        )
-    else:
-        w = live.repartition(n_parts).write.mode("overwrite")
-    w.parquet(tmp)
-    dest = path.rstrip("/")
-    # the rewrite read skips ``_*`` entries, so sidecars such as a stream
-    # sink's ``_batch_ledger`` would die with ``dest``: carry them across
-    for name in os.listdir(dest):
-        if name.startswith("_") and not os.path.exists(os.path.join(tmp, name)):
-            os.rename(os.path.join(dest, name), os.path.join(tmp, name))
-    shutil.rmtree(dest)
-    os.rename(tmp, dest)
-    after, _ = _stats()
-    return {"files_before": before, "files_after": after, "bytes": nbytes}
+    Swapped in by :func:`logagg.util.swap_dir`, which keeps ``_``-prefixed
+    sidecars (a stream sink's ``_batch_ledger``: a replay after compaction
+    still skips committed batches) and heals a crashed swap on the next
+    call; on a cluster, one Iceberg ``rewrite_data_files`` transaction.
+    Row set is IDENTICAL before and after (pinned by test). Returns
+    ``{files_before, files_after, bytes}`` over the files a reader sees.
+    Readers caching plans over ``path`` must re-read after the swap
+    (Spark's CacheManager recache-by-path applies)."""
+    with swap_dir(path) as tmp:
+        files = data_files(path)
+        nbytes = sum(files.values())
+        live = spark.read.parquet(path)
+        if partition_cols:
+            live = live.repartition(*partition_cols)
+        else:
+            live = live.repartition(max(1, -(-nbytes // (target_mb * 1024 * 1024))))
+        live.write.mode("overwrite").partitionBy(*partition_cols).parquet(tmp)
+    return {"files_before": len(files), "files_after": len(data_files(path)), "bytes": nbytes}

@@ -5,8 +5,9 @@ JSON marker for the stage (atomically, via tmp+rename). A rerun skips any
 stage whose marker matches the current input fingerprint and reads its
 metrics back. The batch pipeline keeps its markers in ``<out>/_meta``
 (mid-pipeline kill and resume is a test case); every exactly-once streaming
-sink keeps one marker per micro-batch, ``batch-<id>.json``, in its
-``_batch_ledger`` directory.
+writer keeps one marker per micro-batch, ``batch-<id>.json``: the route,
+frontier and curate sinks in their ``_batch_ledger``, heavy hitters (the
+summary rides in the marker) in its state directory.
 
 Iceberg snapshot properties are the production home for this metadata; the
 sandbox ships no Iceberg runtime jar, so the same contract is kept in a
@@ -46,6 +47,11 @@ class StageLedger:
         if meta.get("fingerprint") != fingerprint:
             return None  # input changed → stage must rerun
         return meta
+
+    def batch_ids(self) -> list[int]:
+        """Ids of the committed ``batch-<id>`` micro-batches, ascending."""
+        markers = self.marker_dir.glob("batch-*.json")
+        return sorted(int(p.stem.removeprefix("batch-")) for p in markers)
 
     def invalidate(self, stage: str) -> None:
         """Drop the stage's marker, so the next run reruns the stage."""

@@ -13,6 +13,7 @@ mode("overwrite") to its own table path.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
@@ -21,7 +22,7 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
-from logagg import aggregate, enrich, parse, route, synth
+from logagg import aggregate, enrich, parse, route, synth, util
 from logagg.checkpoint import StageLedger
 
 
@@ -39,7 +40,7 @@ def _keep_committed(ledger: StageLedger, fp: str, bucket_stages: list[str], out:
     for a crash mid-bucket, an invalidated marker, a wider stale layout and
     an outdir of the older layout."""
     routed = out / "routed"
-    files = route.data_files(routed)
+    files = util.data_files(routed)
     keep: set[str] = set()
     for stage in bucket_stages:
         meta = ledger.completed(stage, fp)
@@ -103,15 +104,21 @@ def run_pipeline(spark: SparkSession, sf_dir: str, outdir: str) -> dict:
 
     results["parse"], _ = ledger.run_stage_buckets("parse", fp, n_buckets, _parse_bucket)
 
+    # route and aggregate read what the buckets committed, so they are
+    # fingerprinted on it: a rerun bucket commits new file names
+    buckets = [ledger.completed(stage, fp) for stage in bucket_stages]
+    manifests = json.dumps([sorted(m["manifest"].items()) for m in buckets])
+    down_fp = _fingerprint(fp, hashlib.sha256(manifests.encode()).hexdigest())
+
     # stage 2: route → the rollup of the buckets' per-sink counts (the
     # fan-out write itself ran inside each bucket); no Spark job
     def _route_stage() -> dict:
         sinks: Counter = Counter()
-        for stage in bucket_stages:
-            sinks.update(ledger.completed(stage, fp)["sinks"])
+        for m in buckets:
+            sinks.update(m["sinks"])
         return {"rows": sum(sinks.values()), "sinks": dict(sinks), "sink": str(routed_path)}
 
-    results["route"], _ = ledger.run_stage("route", fp, _route_stage)
+    results["route"], _ = ledger.run_stage("route", down_fp, _route_stage)
 
     # stage 3: per-sink aggregates (+ severity/source invariants)
     agg_path = str(out / "aggregates")
@@ -130,5 +137,5 @@ def run_pipeline(spark: SparkSession, sf_dir: str, outdir: str) -> dict:
         }
         return {"severity_counts": sev, "sink": agg_path}
 
-    results["aggregate"], _ = ledger.run_stage("aggregate", fp, _agg_stage)
+    results["aggregate"], _ = ledger.run_stage("aggregate", down_fp, _agg_stage)
     return results

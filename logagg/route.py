@@ -20,6 +20,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from logagg.util import data_files
+
 # both keys are strings: inference would read a node "007" as the integer 7
 _ROUTE_KEYS = ds.partitioning(
     pa.schema([("node", pa.string()), ("log_type", pa.string())]), flavor="hive"
@@ -34,20 +36,6 @@ def with_route(parsed: DataFrame) -> DataFrame:
 def route_counts(parsed: DataFrame) -> DataFrame:
     """Per-sink row counts keyed by the routing expression."""
     return with_route(parsed).groupBy("route").agg(F.count("*").alias("n"))
-
-
-def data_files(outdir: str | Path) -> dict[str, int]:
-    """``{relpath: bytes}`` of the files a reader of ``outdir`` sees: like
-    Spark and pyarrow, skip every file or directory named ``_*`` or ``.*``
-    (``_SUCCESS``, ``.crc`` checksums, a write's ``_temporary`` staging)."""
-    files: dict[str, int] = {}
-    for root, dirs, names in os.walk(outdir):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for name in names:
-            if not name.startswith(("_", ".")):
-                p = os.path.join(root, name)
-                files[os.path.relpath(p, outdir)] = os.path.getsize(p)
-    return files
 
 
 def _sink_counts(outdir: str | Path, relpaths) -> dict[str, int]:

@@ -56,8 +56,8 @@ format, and every mutation is exact, not approximate):
 * ``compact_index`` is the batch maintenance job: rewrites postings and
   doclens without dead rows (one file per bucket — the small-files
   answer after k incremental appends), drops the tombstones. Searches
-  are identical before/after. The dir-swap here is local-fs; on a
-  cluster the swap is one Iceberg RTAS/transaction.
+  are identical before/after, also after a crash mid-swap
+  (``util.swap_dir``); on a cluster the swap is one Iceberg RTAS.
 
 Phrase search (``positional=True`` at build time): postings gain a
 ``positions array<int>`` column — which BM25 queries never read (parquet
@@ -72,11 +72,18 @@ from __future__ import annotations
 
 import math
 import re
+import shutil
 from typing import Iterable
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from logagg.util import data_files, recover_swap, swap_dir
+
+# compact_index replaces these through util.swap_dir; _read_meta, which
+# every entry point that touches them runs first, heals a dead swap
+_SWAPPED = ("postings", "doclens")
 
 SEARCH_TOKEN_RE = re.compile(r"[a-z0-9]+")
 _TOKEN_RE_LIT = "[a-z0-9]+"
@@ -208,6 +215,8 @@ def _write_meta(
 
 
 def _read_meta(spark: SparkSession, index_dir: str) -> dict:
+    for comp in _SWAPPED:
+        recover_swap(f"{index_dir}/{comp}")
     d = spark.read.parquet(f"{index_dir}/meta").collect()[0].asDict()
     d.setdefault("gen", 0)
     d.setdefault("positional", False)
@@ -348,41 +357,32 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     k incremental appends accumulate: postings are rewritten one file per
     bucket (term-sorted, so row-group skipping survives), doclens to
     ~4M-row files, and the tombstone set is retired. Search results are
-    identical before and after (meta was already exact). Local-fs dir
-    swap here; on a cluster this job is one Iceberg RTAS/transaction.
-    Returns ``{files_before, files_after}``."""
-    import os
-    import shutil
-
+    identical before and after (meta was already exact), and after a crash
+    at any step: each component is swapped in by :func:`logagg.util.swap_dir`
+    (healed by :func:`_read_meta`), the tombstones go last. On a cluster
+    this job is one Iceberg RTAS/transaction. Returns ``{files_before,
+    files_after}`` over the files a reader sees."""
     meta = _read_meta(spark, index_dir)
     tomb = _tombstones(spark, index_dir)
 
     def _nfiles() -> int:
-        return sum(
-            1
-            for comp in ("postings", "doclens")
-            for _, _, fs in os.walk(f"{index_dir}/{comp}")
-            for f in fs
-            if f.endswith(".parquet")
-        )
+        return sum(len(data_files(f"{index_dir}/{comp}")) for comp in _SWAPPED)
 
     before = _nfiles()
     doclens_parts = max(1, -(-meta["n_docs"] // 4_000_000))
-    for comp in ("postings", "doclens"):
-        live = _live(spark.read.parquet(f"{index_dir}/{comp}"), tomb)
-        tmp = f"{index_dir}/{comp}__compact"
-        if comp == "postings":
-            (
-                live.repartition("bucket")
-                .sortWithinPartitions("bucket", "term")
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(tmp)
-            )
-        else:
-            live.repartition(doclens_parts).write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(f"{index_dir}/{comp}")
-        os.rename(tmp, f"{index_dir}/{comp}")
+    for comp in _SWAPPED:
+        with swap_dir(f"{index_dir}/{comp}") as tmp:
+            live = _live(spark.read.parquet(f"{index_dir}/{comp}"), tomb)
+            if comp == "postings":
+                (
+                    live.repartition("bucket")
+                    .sortWithinPartitions("bucket", "term")
+                    .write.mode("overwrite")
+                    .partitionBy("bucket")
+                    .parquet(tmp)
+                )
+            else:
+                live.repartition(doclens_parts).write.mode("overwrite").parquet(tmp)
     if tomb is not None:
         shutil.rmtree(f"{index_dir}/tombstones", ignore_errors=True)
     return {"files_before": before, "files_after": _nfiles()}

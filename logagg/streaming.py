@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructType
 
-from logagg import parse, route
+from logagg import parse, route, util
 from logagg.checkpoint import StageLedger
 from logagg.schemas import PAGES_SCHEMA
 
@@ -339,56 +339,41 @@ def run_streaming_heavy_hitters(
     folded distributed (``aggregate.mg_summary``: map-only Arrow pass +
     bounded keywise merge), then the ≤ capacity-row state is updated
     driver-side with the same single-source merge kernel
-    (``refsketch.misra_gries_update_py``) and committed ATOMICALLY as
-    ``<state_dir>/state-<batch_id>.json`` — one rename is both the state
-    write and the replay marker, so a replayed batch id is skipped
-    without a separate ledger and the state transition is exactly-once
-    (contrast run_streaming_route_multiplex, whose sink append and marker
-    are two steps with a documented at-least-once window).
+    (``refsketch.misra_gries_update_py``) and committed as the ``state``
+    of the batch's :class:`logagg.checkpoint.StageLedger` marker in
+    ``state_dir`` (the highest committed batch holds the current state):
+    one marker is both the state write and the replay marker, so the state
+    transition is exactly-once (contrast run_streaming_route_multiplex,
+    whose sink append and marker are two steps, at-least-once between).
 
     The MG error contract survives streaming: state(after batches B1..Bn)
     is a valid MG(capacity) summary of the concatenated stream, every
     counter underestimating by ≤ N_total/(capacity+1); with capacity ≥
     total distinct keys the counts are exact and equal the batch operator
     (pytest-pinned). Returns the final summary dict."""
-    import json
-
     from logagg import aggregate
     from logagg.refsketch import misra_gries_update_py
 
-    state_path = Path(state_dir)
-    state_path.mkdir(parents=True, exist_ok=True)
-
-    def _state_files() -> list[tuple[int, Path]]:
-        out = []
-        for p in state_path.glob("state-*.json"):
-            try:
-                out.append((int(p.stem.split("-")[1]), p))
-            except ValueError:
-                continue
-        return sorted(out)
+    ledger = StageLedger(state_dir)
 
     def _current_state() -> dict[str, int]:
-        files = _state_files()
-        return json.loads(files[-1][1].read_text()) if files else {}
+        ids = ledger.batch_ids()
+        return ledger.completed(f"batch-{ids[-1]}", "heavy_hitters")["state"] if ids else {}
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        marker = state_path / f"state-{batch_id}.json"
-        if marker.exists():  # replayed batch: state already includes it
-            return
-        batch_counts = {
-            r["key"]: r["cnt"]
-            for r in aggregate.mg_summary(batch_df, key_col, capacity).collect()
-        }
-        new_state = misra_gries_update_py(_current_state(), batch_counts, capacity)
-        tmp = marker.with_suffix(".json.tmp")
-        tmp.write_text(json.dumps(new_state))
-        tmp.rename(marker)  # atomic: state commit == replay marker
-        # prune: every state file doubles as a replay marker, so keep a
+        def _fold() -> dict:
+            batch_counts = {
+                r["key"]: r["cnt"]
+                for r in aggregate.mg_summary(batch_df, key_col, capacity).collect()
+            }
+            return {"state": misra_gries_update_py(_current_state(), batch_counts, capacity)}
+
+        ledger.run_stage(f"batch-{batch_id}", "heavy_hitters", _fold)
+        # prune: every marker doubles as a replay marker, so keep a
         # GENEROUS tail (64 batches) — old enough to outlive any plausible
         # replay window while the directory stays O(capacity x 64) bytes
-        for _, old in _state_files()[:-64]:
-            old.unlink(missing_ok=True)
+        for old in ledger.batch_ids()[:-64]:
+            ledger.invalidate(f"batch-{old}")
 
     stream = _file_stream(spark, src_dir, max_files_per_trigger)
     _drain(stream.writeStream.foreachBatch(_apply).option("checkpointLocation", checkpoint_dir))
@@ -484,9 +469,9 @@ def run_streaming_bottomk(
     mergeable AND idempotent under re-merge (bottomk(S ∪ B) ==
     bottomk(bottomk(S) ∪ B), and re-merging rows already in S changes
     nothing), so a replayed micro-batch converges to the same k rows.
-    The only machinery required is an atomic state swap: merge into
-    ``<state_dir>__next``, rename over ``<state_dir>`` (the
-    searchidx-compaction swap). Each micro-batch does one
+    The only machinery required is an atomic state swap: each merge
+    replaces ``<state_dir>`` through :func:`logagg.util.swap_dir` (which
+    also heals a swap that crashed midway). Each micro-batch does one
     bounded-k union + TakeOrdered — state never grows past k rows.
 
     Returns the final state row count (≤ k). Read the sample back with
@@ -494,37 +479,22 @@ def run_streaming_bottomk(
     ``aggregate.bottomk_sample`` over the full batch input (pinned by
     test)."""
     import os
-    import shutil
 
     from logagg import aggregate
 
-    tmp = f"{state_dir}__next"
-
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        # crash recovery: a death between rmtree(state) and rename(tmp)
-        # leaves only a committed tmp — finish that swap before merging
-        # (tmp without _SUCCESS is a half-write; the overwrite below
-        # replaces it)
-        if not os.path.exists(state_dir) and os.path.exists(
-            os.path.join(tmp, "_SUCCESS")
-        ):
-            os.rename(tmp, state_dir)
-        merged = aggregate.bottomk_sample(batch_df, id_col, k)
-        if os.path.exists(state_dir):
-            # dropDuplicates on the id BEFORE the rank cut: a replayed row
-            # already in state would otherwise occupy two of the k slots
-            # and silently evict the tail — the dedup is what makes the
-            # merge idempotent (rows with equal ids are identical here)
-            prev = spark.read.parquet(state_dir)
-            merged = aggregate.bottomk_sample(
-                prev.unionByName(batch_df).dropDuplicates([id_col]), id_col, k
-            )
-        # land the merge, then swap — the tmp write EXECUTES the read of
-        # the old state before it is touched
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        if os.path.exists(state_dir):
-            shutil.rmtree(state_dir)
-        os.rename(tmp, state_dir)
+        with util.swap_dir(state_dir) as tmp:
+            if os.path.exists(state_dir):
+                # dropDuplicates on the id BEFORE the rank cut: a replayed
+                # row already in state would otherwise occupy two of the k
+                # slots and silently evict the tail — the dedup is what
+                # makes the merge idempotent (rows with equal ids are
+                # identical here)
+                prev = spark.read.parquet(state_dir)
+                batch_df = prev.unionByName(batch_df).dropDuplicates([id_col])
+            # this write EXECUTES the read of the old state before the swap
+            sample = aggregate.bottomk_sample(batch_df, id_col, k)
+            sample.coalesce(1).write.mode("overwrite").parquet(tmp)
 
     stream = _file_stream(spark, src_dir, max_files_per_trigger)
     _drain(stream.writeStream.foreachBatch(_sink).option("checkpointLocation", checkpoint_dir))
@@ -588,14 +558,10 @@ def run_streaming_curate(
         def _commit() -> dict:
             land_surv = f"{outdir}/batch_id={batch_id}"
             land_md5 = f"{state_dir}/_pending/batch-{batch_id}"
-            landed = (Path(land_surv) / "_SUCCESS").exists() and (
-                Path(land_md5) / "_SUCCESS"
-            ).exists()
+            landed = all((Path(d) / "_SUCCESS").exists() for d in (land_surv, land_md5))
             manifest = None
             if not landed:
-                committed = sorted(
-                    int(p.stem.split("-")[1]) for p in ledger.marker_dir.glob("batch-*.json")
-                )
+                committed = ledger.batch_ids()
                 corpus = (
                     spark.read.schema(schema).parquet(
                         *[f"{outdir}/batch_id={b}" for b in committed]

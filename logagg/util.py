@@ -1,14 +1,17 @@
-"""Small shared utilities for operator lifecycle: result materialization and
-the scratch-storage contract of every iterative (fixpoint) operator."""
+"""Small shared utilities for operator lifecycle: result materialization,
+the scratch-storage contract of every iterative (fixpoint) operator, and the
+one directory swap that replaces a committed directory as a unit."""
 
 from __future__ import annotations
 
 import itertools
+import os
 import shutil
 import tempfile
 import uuid
 from collections.abc import Iterator
 from contextlib import contextmanager
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -131,3 +134,61 @@ def scratch(spark: SparkSession, prefix: str, base: str | None = None) -> Iterat
         yield Scratch(spark, tmp, kept=False)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def data_files(root: str | Path) -> dict[str, int]:
+    """``{relpath: bytes}`` of the files a reader of ``root`` sees: like
+    Spark and pyarrow, skip every file or directory named ``_*`` or ``.*``
+    (``_SUCCESS``, ``.crc`` checksums, a write's ``_temporary`` staging)."""
+    files: dict[str, int] = {}
+    for base, dirs, names in os.walk(root):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for name in names:
+            if not name.startswith(("_", ".")):
+                p = os.path.join(base, name)
+                files[os.path.relpath(p, root)] = os.path.getsize(p)
+    return files
+
+
+def recover_swap(dest: str) -> None:
+    """The one recovery rule of :func:`swap_dir`: if ``dest`` is gone, move
+    in ``<dest>__next`` when its ``_SUCCESS`` says it is whole, else put
+    ``<dest>__old`` back; then delete what is left of either. ``dest`` ends
+    with the old data or the new, each with every sidecar."""
+    dest = dest.rstrip("/")
+    nxt, old = f"{dest}__next", f"{dest}__old"
+    if not os.path.exists(dest):
+        if os.path.exists(os.path.join(nxt, "_SUCCESS")):
+            os.rename(nxt, dest)
+        elif os.path.exists(old):
+            os.rename(old, dest)
+    for leftover in (nxt, old):
+        if os.path.exists(leftover):
+            shutil.rmtree(leftover)
+
+
+@contextmanager
+def swap_dir(dest: str) -> Iterator[str]:
+    """Replace the committed directory ``dest`` as a unit: the block writes
+    the new one (a Spark write, executing every read of ``dest`` it needs)
+    to the yielded ``<dest>__next``. On exit, copy in each ``_``-prefixed
+    entry of ``dest`` it lacks (a sink's ``_batch_ledger``, which a rewrite
+    read skips; copied, so ``dest`` stays whole until the swap starts),
+    rename ``dest`` to ``__old`` and ``__next`` to ``dest``, delete
+    ``__old``. :func:`recover_swap` runs on entry (and in readers that may
+    come first). On a cluster this is one table-format commit."""
+    dest = dest.rstrip("/")
+    recover_swap(dest)
+    nxt, old = f"{dest}__next", f"{dest}__old"
+    yield nxt
+    if os.path.exists(dest):
+        for name in sorted(os.listdir(dest)):
+            src, dst = os.path.join(dest, name), os.path.join(nxt, name)
+            if name.startswith("_") and not os.path.exists(dst):
+                if os.path.isdir(src):
+                    shutil.copytree(src, dst)
+                else:
+                    shutil.copy2(src, dst)
+        os.rename(dest, old)
+    os.rename(nxt, dest)
+    shutil.rmtree(old, ignore_errors=True)

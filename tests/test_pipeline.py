@@ -218,7 +218,8 @@ def test_pipeline_guard_drops_unlisted_routed_file(spark, tmp_path):
 
 def test_pipeline_guard_reruns_bucket_of_truncated_file(spark, tmp_path):
     """A listed file whose size no longer matches its marker invalidates
-    that one bucket: it reruns, the other buckets keep their markers."""
+    that one bucket: it reruns, the other buckets keep their markers, and
+    the route and aggregate stages downstream of it rerun."""
     out = tmp_path / "out"
     sf_dir = "/root/testdata/sf0.01"  # 3 part files -> 3 buckets
     first = run_pipeline(spark, sf_dir, str(out))
@@ -227,10 +228,13 @@ def test_pipeline_guard_reruns_bucket_of_truncated_file(spark, tmp_path):
     rel = next(iter(json.loads(victim.read_text())["manifest"]))
     with open(out / "routed" / rel, "r+b") as f:
         f.truncate(16)
-    before = {p.name: json.loads(p.read_text())["completed_at"] for p in meta.glob("parse.b*.json")}
+    before = {p.name: json.loads(p.read_text())["completed_at"] for p in meta.glob("*.json")}
     second = run_pipeline(spark, sf_dir, str(out))
-    after = {p.name: json.loads(p.read_text())["completed_at"] for p in meta.glob("parse.b*.json")}
-    assert {k for k in before if before[k] != after[k]} == {victim.name}
+    after = {p.name: json.loads(p.read_text())["completed_at"] for p in meta.glob("*.json")}
+    rerun = {k for k in before if before[k] != after[k]}
+    assert {k for k in rerun if k.startswith("parse.b")} == {victim.name}
+    # route and aggregate read the rerun bucket's new files, so they rerun
+    assert {"route.json", "aggregate.json"} <= rerun
     assert second["parse"]["rows"] == first["parse"]["rows"]
     assert spark.read.parquet(str(out / "routed")).count() == first["route"]["rows"]
 

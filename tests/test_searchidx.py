@@ -251,6 +251,44 @@ def test_compact_index_identical_and_squashes_files(spark, tmp_path):
             assert a == pytest.approx(w, rel=1e-12)
 
 
+def test_compact_index_crash_between_renames_keeps_scores(spark, tmp_path, monkeypatch):
+    """Compaction killed after the old postings dir left its place and
+    before the new one took it: the next search heals the half-swap and
+    returns the pre-crash scores; the next compaction completes."""
+    import os
+
+    idx = str(tmp_path / "idx")
+    items = sorted(CORPUS.items())
+    searchidx.build_index(
+        spark.createDataFrame(items[:3], "id string, text string"), idx, num_buckets=8
+    )
+    searchidx.update_index(spark.createDataFrame(items[3:], "id string, text string"), idx)
+    searchidx.delete_docs(spark, idx, ["d3"])
+    before = {q: _search_pairs(spark, idx, q) for q in QUERIES}
+    real_rename = os.rename
+
+    def killed(src, dst):
+        if os.fspath(dst) == f"{idx}/postings":
+            raise OSError("killed mid-compaction")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", killed)
+    with pytest.raises(OSError, match="killed"):
+        searchidx.compact_index(spark, idx)
+    monkeypatch.undo()
+
+    def assert_same_scores():
+        for q in QUERIES:
+            after = _search_pairs(spark, idx, q)
+            assert [i for i, _ in after] == [i for i, _ in before[q]]
+            for (_, a), (_, w) in zip(after, before[q]):
+                assert a == pytest.approx(w, rel=1e-12)
+
+    assert_same_scores()
+    searchidx.compact_index(spark, idx)
+    assert_same_scores()
+
+
 PHRASE_CORPUS = {
     "p1": "the quick brown fox jumps over the lazy dog",
     "p2": "brown quick the fox — same words, no phrase",

@@ -1,5 +1,6 @@
 """Streaming parse+aggregate must equal the batch plan on the same input."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from logagg import aggregate, parse, streaming
@@ -236,11 +237,53 @@ def test_streaming_route_replay_after_compaction(spark, pages_cache, tmp_path):
     assert spark.read.parquet(str(sink)).count() == n_rows
 
 
+def test_streaming_route_replay_after_crashed_compaction(spark, pages_cache, tmp_path, monkeypatch):
+    """Compaction killed after it carried the sink's sidecars, at its first
+    step on the live sink itself: the sink still holds its
+    ``_batch_ledger``, so a replay (checkpoint lost) adds no rows, and the
+    next compaction completes."""
+    import os
+    import shutil
+
+    from logagg import catalog
+
+    pages_dir = str(pages_cache / "pages.parquet")
+    sink, ckpt = tmp_path / "routed", tmp_path / "ckpt"
+    counts = streaming.run_streaming_route_multiplex(
+        spark, pages_dir, str(sink), str(ckpt), max_files_per_trigger=1
+    )
+    n_rows = spark.read.parquet(str(sink)).count()
+
+    def killed_on_sink(real):
+        def fn(path, *args, **kwargs):
+            if os.fspath(path) == str(sink):
+                raise OSError("killed mid-compaction")
+            return real(path, *args, **kwargs)
+
+        return fn
+
+    monkeypatch.setattr(os, "rename", killed_on_sink(os.rename))
+    monkeypatch.setattr(shutil, "rmtree", killed_on_sink(shutil.rmtree))
+    with pytest.raises(OSError, match="killed"):
+        catalog.compact_parquet_dir(spark, str(sink), partition_cols=("node", "log_type"))
+    monkeypatch.undo()
+
+    shutil.rmtree(ckpt)
+    replayed = streaming.run_streaming_route_multiplex(
+        spark, pages_dir, str(sink), str(ckpt), max_files_per_trigger=1
+    )
+    assert replayed == counts
+    assert spark.read.parquet(str(sink)).count() == n_rows
+    catalog.compact_parquet_dir(spark, str(sink), partition_cols=("node", "log_type"))
+    assert spark.read.parquet(str(sink)).count() == n_rows
+    assert list((sink / "_batch_ledger").glob("batch-*.json"))
+
+
 def test_streaming_heavy_hitters_equals_batch_and_replays(spark, tmp_path):
     """With capacity >= total distinct keys the streamed MG state is exact,
     so it must equal the batch groupBy counts; a full replay (fresh
     checkpoint, same state dir) must not change the state — every batch id
-    hits its atomic state-file marker."""
+    hits its ledger marker."""
     import json
 
     from pyspark.sql import functions as F
@@ -283,9 +326,9 @@ def test_streaming_heavy_hitters_equals_batch_and_replays(spark, tmp_path):
         max_files_per_trigger=1,
     )
     assert state2 == state1
-    markers = sorted((tmp_path / "state").glob("state-*.json"))
+    markers = sorted((tmp_path / "state").glob("batch-*.json"))
     assert len(markers) >= 2  # one atomic commit per applied batch
-    assert json.loads(markers[-1].read_text()) == true
+    assert json.loads(markers[-1].read_text())["state"] == true
 
 
 def test_streaming_heavy_hitters_error_bound_small_capacity(spark, tmp_path):
