@@ -39,16 +39,16 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from logagg import dedup, textstats
+from logagg import dedup, textstats, util
 
 
 @dataclass
 class CurationResult:
     docs: DataFrame  # surviving (and possibly packed) documents
     manifest: list[dict] = field(default_factory=list)
-    # update_state=False increments only: the frames a later
-    # commit_increment_state call lands/folds — {"md5": accepted text
-    # hashes (lineage-free), "survivors": the docs frame}
+    # probe_increment only: the state update that commit_increment_state
+    # folds in — {"md5": accepted text hashes (lineage-free), "survivors":
+    # the docs frame}
     pending: dict | None = None
 
     def unpersist(self) -> None:
@@ -150,17 +150,9 @@ def curate(
         if not (resume and materialize_dir):
             return None
         path = f"{materialize_dir}/{idx:02d}_{stage}"
-        try:
-            jvm_fs_ok = spark.read.parquet(path)
-            # _SUCCESS check: only a fully committed stage counts
-            hconf = spark.sparkContext._jsc.hadoopConfiguration()
-            jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path + "/_SUCCESS")
-            fs = jpath.getFileSystem(hconf)
-            if not fs.exists(jpath):
-                return None
-            return jvm_fs_ok
-        except Exception:
-            return None
+        # _SUCCESS check: only a fully committed stage counts
+        fs, success = util.hadoop_path(spark, f"{path}/_SUCCESS")
+        return util.read_parquet_or_none(spark, path) if fs.exists(success) else None
 
     def step(stage: str, fn) -> None:
         nonlocal cur, n_cur, idx
@@ -500,7 +492,6 @@ def curate_increment(
     text_col: str = "text",
     corpus: DataFrame | None = None,
     near_dedup: bool = False,
-    update_state: bool = True,
     **filter_kwargs,
 ) -> CurationResult:
     """Continuous-ingest curation: run the stateless filter stages on a
@@ -522,14 +513,41 @@ def curate_increment(
     All ``curate`` filter knobs pass through (``exact_dedup``/
     ``near_dedup`` knobs of the batch pipeline are managed here).
 
-    ``update_state=False`` runs the PROBES only — no md5 append, no band
-    index write — and returns the would-be state updates on
-    ``CurationResult.pending`` for a later :func:`commit_increment_state`
-    call. This splits the increment into side-effect-free compute and an
-    idempotent commit, the ordering :func:`logagg.streaming.
-    run_streaming_curate` needs for exactly-once replay (a re-run probe
-    AFTER a partial state append would see its own hashes and silently
-    drop the whole batch)."""
+    The increment is :func:`probe_increment` (reads the state, never
+    writes it) followed by :func:`commit_increment_state` (the only
+    writer of the state) — the same two halves
+    :func:`logagg.streaming.run_streaming_curate` runs with a landing
+    between them. The returned docs stay valid after the commit."""
+    res = probe_increment(
+        new_docs, state_dir, id_col=id_col, text_col=text_col, corpus=corpus,
+        near_dedup=near_dedup, **filter_kwargs,
+    )
+    md5, survivors = res.pending["md5"], res.pending["survivors"]
+    commit_increment_state(
+        new_docs.sparkSession, state_dir, md5, survivors,
+        id_col=id_col, text_col=text_col, near_dedup=near_dedup,
+    )
+    md5.unpersist()
+    return CurationResult(docs=res.docs, manifest=res.manifest)
+
+
+def probe_increment(
+    new_docs: DataFrame,
+    state_dir: str,
+    *,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    corpus: DataFrame | None = None,
+    near_dedup: bool = False,
+    **filter_kwargs,
+) -> CurationResult:
+    """The probe half of :func:`curate_increment` (same arguments): the
+    filters and both dedup probes, reading ``state_dir`` and never
+    writing it. The would-be state update is returned on
+    ``CurationResult.pending`` for :func:`commit_increment_state`.
+    Keeping every write out of the probe is what makes a replay sound: a
+    probe re-run AFTER a partial md5 append would see the batch's own
+    hashes and silently drop the whole batch."""
     spark = new_docs.sparkSession
     res = curate(
         new_docs,
@@ -543,14 +561,6 @@ def curate_increment(
     manifest = res.manifest
     n_cur = manifest[-1]["rows_out"] if manifest else cur.count()
 
-    def _read_optional(path: str) -> DataFrame | None:
-        try:
-            df = spark.read.parquet(path)
-            df.schema  # force resolution
-            return df
-        except Exception:
-            return None
-
     # ---- exact dedup: within-batch keeper, then anti-join the md5 index
     rows_in = n_cur
     groups = dedup.exact_dupes(cur, id_col=id_col, text_col=text_col)
@@ -560,7 +570,7 @@ def curate_increment(
         .filter(F.col(id_col) == F.col("keeper"))
         .drop("keeper")
     )
-    md5_idx = _read_optional(f"{state_dir}/md5")
+    md5_idx = util.read_parquet_or_none(spark, f"{state_dir}/md5")
     accepted = (
         within.join(
             md5_idx, within["_md5"] == md5_idx["text_md5"], "left_anti"
@@ -568,38 +578,31 @@ def curate_increment(
         if md5_idx is not None
         else within
     )
-    # LINEAGE CUT, not a mere persist: appending this batch's md5s to the
-    # index below makes Spark invalidate every cached plan that READS that
-    # path — a persisted `accepted` would silently recompute against the
-    # updated index and anti-join ITSELF away (observed: second increment
-    # returns 0 rows). localCheckpoint materializes the rows and truncates
-    # the plan, so no later index write can re-derive this frame.
+    # LINEAGE CUT, not a mere persist: the commit's append of this batch's
+    # md5s to the index makes Spark invalidate every cached plan that
+    # READS that path — a persisted `accepted` would silently recompute
+    # against the updated index and anti-join ITSELF away (observed:
+    # second increment returns 0 rows). localCheckpoint materializes the
+    # rows and truncates the plan, so no later index write can re-derive
+    # this frame.
     accepted = accepted.localCheckpoint()
     n_acc = accepted.count()
     manifest.append(
         {"stage": "exact_dedup_incremental", "rows_in": rows_in, "rows_out": n_acc}
     )
-    new_md5 = accepted.select(F.col("_md5").alias("text_md5")).distinct()
-    if update_state:
-        new_md5.write.mode("append").parquet(f"{state_dir}/md5")
-    else:
-        # eager checkpoint: pending["md5"] must survive accepted's
-        # unpersist below (the caller lands it after this returns)
-        new_md5 = new_md5.localCheckpoint()
+    # eager checkpoint: pending["md5"] must survive accepted's unpersist
+    # below (the commit reads it after this returns)
+    new_md5 = (
+        accepted.select(F.col("_md5").alias("text_md5")).distinct().localCheckpoint()
+    )
     out = accepted.drop("_md5")
 
     # ---- near dedup against the persistent band index
     if near_dedup:
-        have_index = _read_optional(f"{state_dir}/minhash/bands") is not None
-        if not have_index:
-            # bootstrap: freeze the stop set on the first batch, dedup
-            # within it with the batch operator
+        if util.read_parquet_or_none(spark, f"{state_dir}/minhash/bands") is None:
+            # bootstrap: dedup within the first batch with the batch
+            # operator; the commit freezes the stop set from the survivors
             pairs = dedup.minhash_lsh_dupes(out, id_col=id_col, text_col=text_col)
-            if update_state:
-                dedup.minhash_index_write(
-                    out, f"{state_dir}/minhash", id_col=id_col, text_col=text_col,
-                    mode="overwrite",
-                )
         else:
             if corpus is None:
                 raise ValueError(
@@ -611,7 +614,6 @@ def curate_increment(
                 f"{state_dir}/minhash",
                 id_col=id_col,
                 text_col=text_col,
-                update_index=False,  # survivors are appended below
             )
         # Pairwise drop policy (slightly more conservative than the batch
         # pipeline's connected-components keeper on CHAIN clusters, the
@@ -650,41 +652,30 @@ def curate_increment(
         manifest.append(
             {"stage": "near_dedup_incremental", "rows_in": n_acc, "rows_out": n_sur}
         )
-        if not update_state:
-            pass  # commit_increment_state folds the survivors' bands later
-        elif have_index:
-            dedup.minhash_index_write(
-                survivors, f"{state_dir}/minhash", id_col=id_col,
-                text_col=text_col, mode="append",
-            )
-        else:
-            # bootstrap wrote ALL batch docs' bands; rewrite with survivors
-            dedup.minhash_index_write(
-                survivors, f"{state_dir}/minhash", id_col=id_col,
-                text_col=text_col, mode="overwrite",
-            )
         accepted.unpersist()
         out = survivors
 
-    pending = None if update_state else {"md5": new_md5, "survivors": out}
-    return CurationResult(docs=out, manifest=manifest, pending=pending)
+    return CurationResult(
+        docs=out, manifest=manifest, pending={"md5": new_md5, "survivors": out}
+    )
 
 
 def commit_increment_state(
     spark,
     state_dir: str,
-    md5_path: str,
-    survivors_path: str,
+    md5: DataFrame | None,
+    survivors: DataFrame | None,
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
     near_dedup: bool = False,
 ) -> None:
-    """Fold one LANDED increment into the persistent dedup state —
-    IDEMPOTENTLY, so a replay after any crash converges to the same
-    state (the commit half of an ``update_state=False``
-    :func:`curate_increment`; :func:`logagg.streaming.run_streaming_curate`
-    is the caller).
+    """Fold one increment into the persistent dedup state — the only
+    writer of ``state_dir/md5`` and ``state_dir/minhash``, and IDEMPOTENT,
+    so a replay after any crash converges to the same state. ``md5`` and ``survivors`` are the
+    ``pending`` frames of :func:`probe_increment`, or their landed copies
+    read back (:func:`logagg.streaming.run_streaming_curate`); ``None`` is
+    an empty landing, with nothing to fold.
 
     * md5 set: only hashes not already in ``state_dir/md5`` are appended
       (anti-join first — a re-commit after a half-done append adds
@@ -692,41 +683,31 @@ def commit_increment_state(
       write: its lineage reads the same path it appends to, and Spark's
       recache-by-path would otherwise re-derive it mid-write.
     * band index (``near_dedup``): bootstrap = ``mode="overwrite"`` from
-      the landed survivors (idempotent by construction, freezes the stop
-      set exactly as the sequential bootstrap does); thereafter only
-      survivors whose id is absent from ``state_dir/minhash/bands`` are
-      appended. Parquet job commits are all-or-nothing per attempt, so a
-      doc's bands never half-exist."""
-    def _read_optional(path: str):
-        try:
-            df = spark.read.parquet(path)
-            df.schema
-            return df
-        except Exception:
-            return None
+      the survivors (idempotent by construction; freezes the stop set);
+      thereafter only survivors whose id is absent from
+      ``state_dir/minhash/bands`` are appended. Parquet job commits are
+      all-or-nothing per attempt, so a doc's bands never half-exist.
 
-    # a zero-row landing can be a schema-less parquet dir (just _SUCCESS)
-    # — an unreadable landing means an empty batch: nothing to fold
-    new_md5 = _read_optional(md5_path)
-    if new_md5 is not None:
-        idx = _read_optional(f"{state_dir}/md5")
-        todo = new_md5.join(idx, "text_md5", "left_anti") if idx is not None else new_md5
+    State that exists but cannot be read raises (``util.
+    read_parquet_or_none``) instead of being rebuilt from this batch."""
+    if md5 is not None:
+        idx = util.read_parquet_or_none(spark, f"{state_dir}/md5")
+        todo = md5.join(idx, "text_md5", "left_anti") if idx is not None else md5
         todo = todo.localCheckpoint()
         if todo.count():
             todo.write.mode("append").parquet(f"{state_dir}/md5")
         todo.unpersist()
 
-    surv = _read_optional(survivors_path)
-    if near_dedup and surv is not None:
-        bands = _read_optional(f"{state_dir}/minhash/bands")
+    if near_dedup and survivors is not None:
+        bands = util.read_parquet_or_none(spark, f"{state_dir}/minhash/bands")
         if bands is None:
             dedup.minhash_index_write(
-                surv, f"{state_dir}/minhash", id_col=id_col,
+                survivors, f"{state_dir}/minhash", id_col=id_col,
                 text_col=text_col, mode="overwrite",
             )
         else:
             known = bands.select("id").distinct()
-            missing = surv.join(
+            missing = survivors.join(
                 known, F.col(id_col).cast("string") == known["id"], "left_anti"
             ).localCheckpoint()
             if missing.count():

@@ -807,7 +807,6 @@ def minhash_lsh_dupes_incremental(
     index_path: str,
     id_col: str = "url",
     text_col: str = "text",
-    update_index: bool = True,
     materialize: str = "local",
     out_path: str | None = None,
 ) -> DataFrame:
@@ -823,11 +822,12 @@ def minhash_lsh_dupes_incremental(
     inside the old corpus are by definition absent (they were reported
     when THEIR batch arrived).
 
-    ``update_index=True`` appends the new batch's band rows to the index
-    afterward, so the next increment sees this one as corpus. New doc ids
-    must not already exist in the index (re-ingest would self-pair).
-    ``corpus_docs`` must contain the text of every indexed doc (it is only
-    touched via a candidate-id semi-join)."""
+    A probe: it never writes the index. The caller folds the docs it
+    keeps into it (``minhash_index_write(..., mode="append")``, or
+    :func:`logagg.curate.commit_increment_state`), so the next increment
+    sees them as corpus. New doc ids must not already exist in the index
+    (re-ingest would self-pair). ``corpus_docs`` must contain the text of
+    every indexed doc (it is only touched via a candidate-id semi-join)."""
     spark = new_docs.sparkSession
     stop = _read_index_stop(spark, index_path)
     src = new_docs.select(F.col(id_col).cast("string").alias("id"), F.col(text_col).alias("text"))
@@ -860,12 +860,9 @@ def minhash_lsh_dupes_incremental(
         all_docs = corpus_docs.select(
             F.col(id_col), F.col(text_col)
         ).unionByName(new_docs.select(F.col(id_col), F.col(text_col)))
-        result = _verify_candidates(
+        return _verify_candidates(
             all_docs, cands, stop, id_col, text_col, materialize, out_path
         )
-        if update_index:
-            new_bands.write.mode("append").parquet(f"{index_path}/bands")
-        return result
     finally:
         new_bands.unpersist()
 

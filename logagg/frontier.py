@@ -46,10 +46,11 @@ Scale shapes (the frontier is the big side — billions of URLs; rules are
   global sort. Skew note: a single giant host serializes its own slot
   numbering by construction (politeness is per-host sequential anyway —
   that "skew" is the semantics).
-* :func:`frontier_increment` — canonical-url key, anti-join against the
-  parquet seen index, append-back. ``localCheckpoint`` before the index
-  append (appending to a path INVALIDATES cached plans reading it — the
-  curate_increment lesson).
+* :func:`frontier_increment` — the probe :func:`unseen_in_batch`
+  (canonical-url key, anti-join against the parquet seen index) plus the
+  key append. The probe never writes and returns a materialized frame
+  (appending to a path INVALIDATES cached plans reading it — the
+  curate_increment lesson); the store is written only after it.
 """
 
 from __future__ import annotations
@@ -419,30 +420,28 @@ def frontier_increment(
     new_urls: DataFrame, seen_dir: str, *, url_col: str = "url"
 ) -> DataFrame:
     """Discovered-URL batch → the not-yet-seen subset, updating the
-    persistent seen index: canonicalize (recrawl/mirror key), keep the min
-    URL per canonical within the batch, anti-join the parquet index,
-    append the new keys. First batch bootstraps the index. The returned
-    frame is localCheckpoint-ed — safe to reuse after the append."""
-    spark = new_urls.sparkSession
-    canon = new_urls.withColumn(
-        "_canon", textstats.canonical_url(F.col(url_col))
-    )
-    fresh = _keep_min_per_canon(canon, url_col)
-    try:
-        idx = spark.read.parquet(f"{seen_dir}/urls")
-        idx.schema  # force resolution
-    except Exception:
-        idx = None
-    if idx is not None:
-        fresh = fresh.join(
-            idx, fresh["_canon"] == idx["canon_url"], "left_anti"
-        )
-    # lineage cut BEFORE appending to the index this frame reads
-    fresh = fresh.localCheckpoint()
+    persistent seen index: the probe :func:`unseen_in_batch`
+    (canonicalize, keep the min URL per canonical within the batch,
+    anti-join the parquet index) plus the append of the new keys. First
+    batch bootstraps the index. The returned frame is materialized — safe
+    to reuse after the append.
+
+    A ``<seen_dir>/bloom`` sketch left by :func:`filter_unseen_bloom` is
+    dropped FIRST: it would lack the keys appended here, and its probe
+    reads a sketch miss as provably unseen. The next accelerated call
+    rebuilds it from the whole index (its bootstrap case)."""
+    _drop_sketch(new_urls.sparkSession, seen_dir)
+    fresh = unseen_in_batch(new_urls, seen_dir, url_col=url_col)
     fresh.select(F.col("_canon").alias("canon_url")).write.mode("append").parquet(
         f"{seen_dir}/urls"
     )
     return fresh.drop("_canon")
+
+
+def _drop_sketch(spark, seen_dir: str) -> None:
+    """Delete ``<seen_dir>/bloom`` if it is there (Hadoop FS, any scheme)."""
+    fs, jpath = util.hadoop_path(spark, f"{seen_dir}/bloom")
+    fs.delete(jpath, True)
 
 
 def _keep_min_per_canon(canon: DataFrame, url_col: str) -> DataFrame:
@@ -494,11 +493,11 @@ def filter_unseen_bloom(
     registers (≤ n_bits/64 rows by construction) merge into the dense
     driver copy, and the merged table is rewritten whole — driver data,
     so rewriting the path just read needs no lineage cut. The two stores
-    share a lifecycle: bootstrap writes both, every increment appends
-    urls + rewrites bloom. (n_bits, n_hashes) are fixed at bootstrap by
-    meta rows in the bloom table (words -1/-2 store them) and enforced
-    on every call — probing with the wrong geometry would silently break
-    the no-false-negative contract.
+    share a lifecycle: bootstrap writes both, every increment drops the
+    sketch, appends urls and rewrites the sketch. (n_bits, n_hashes) are
+    fixed at bootstrap by meta rows in the bloom table (words -1/-2 store
+    them) and enforced on every call — probing with the wrong geometry
+    would silently break the no-false-negative contract.
 
     Split into a side-effect-free probe (:func:`unseen_in_batch`) and an
     idempotent store commit (:func:`commit_seen`) so the streaming form
@@ -545,8 +544,8 @@ def unseen_in_batch(
         "_canon", textstats.canonical_url(F.col(url_col))
     )
     fresh = _keep_min_per_canon(canon, url_col)
-    idx = _read_parquet_or_none(spark, f"{seen_dir}/urls")
-    regs_tbl = _read_parquet_or_none(spark, f"{seen_dir}/bloom")
+    idx = util.read_parquet_or_none(spark, f"{seen_dir}/urls")
+    regs_tbl = util.read_parquet_or_none(spark, f"{seen_dir}/bloom")
     if regs_tbl is not None and idx is not None:
         meta = {
             r["word"]: r["bits"]
@@ -581,9 +580,10 @@ def unseen_in_batch(
         # state — the only subtree with lineage through <seen_dir>/urls
         fresh = unseen.unionByName(verified.localCheckpoint())
     elif idx is not None:
-        # index exists (e.g. built by frontier_increment) but no sketch
-        # yet: exact path for this batch; commit_seen bootstraps the
-        # sketch from the WHOLE index so the next batch gets the probe
+        # index exists (built by frontier_increment, or a commit crashed
+        # after dropping the sketch) but no sketch: exact path for this
+        # batch; commit_seen bootstraps the sketch from the WHOLE index so
+        # the next batch gets the probe
         fresh = fresh.join(
             idx, fresh["_canon"] == idx["canon_url"], "left_anti"
         ).localCheckpoint()
@@ -599,18 +599,24 @@ def commit_seen(
     n_bits: int = 1 << 20,
     n_hashes: int = 7,
 ) -> None:
-    """The store-mutation half of :func:`filter_unseen_bloom`: append the
-    batch's canonical keys to ``<seen_dir>/urls`` and rewrite the merged
-    bloom registers. IDEMPOTENT for the same ``fresh`` frame — re-running
-    after a crash re-appends the same canonical keys (duplicate index
-    rows are harmless: the anti-join and the sketch OR both absorb them)
-    and ORs the same bits. ``fresh`` must carry ``_canon`` and must NOT
+    """The store-mutation half of :func:`filter_unseen_bloom`: collect the
+    sketch to the driver, drop it, append the batch's canonical keys to
+    ``<seen_dir>/urls`` and write the merged bloom registers. A crash at
+    any step leaves either the old sketch over the old index or no sketch
+    (rebuilt from the whole index on the next call). IDEMPOTENT for the
+    same ``fresh`` frame — re-running after a crash re-appends the same
+    canonical keys (duplicate index rows are harmless: the anti-join and
+    the sketch OR both absorb them) and ORs the same bits. ``fresh`` must carry ``_canon`` and must NOT
     have live lineage through ``<seen_dir>/urls`` (localCheckpoint it, or
     read it back from a landed parquet — the two callers)."""
     from logagg import aggregate
 
     spark = fresh.sparkSession
-    had_bloom = _read_parquet_or_none(spark, f"{seen_dir}/bloom") is not None
+    regs_tbl = util.read_parquet_or_none(spark, f"{seen_dir}/bloom")
+    # the merge base, collected to the driver before the sketch is dropped
+    dense = None if regs_tbl is None else aggregate.bloom_collect(
+        regs_tbl.filter(F.col("word") >= 0), n_bits=n_bits
+    )
     # bootstrap sketch source: the index rows that existed BEFORE this
     # batch's append (the append below would otherwise make the read-back
     # index contain `fresh` too, and the old read-after-append shape
@@ -618,20 +624,18 @@ def commit_seen(
     # but a full second bloom_build pass over the batch: measured 1.8 s →
     # 0.85 s on the sf0.1 bootstrap). The file listing is snapshotted at
     # read time; even a lazy re-list only re-ORs identical bits.
-    idx_before = None if had_bloom else _read_parquet_or_none(
+    idx_before = None if dense is not None else util.read_parquet_or_none(
         spark, f"{seen_dir}/urls"
     )
+    # drop the sketch BEFORE the append: a crash between the two leaves an
+    # index without a sketch (the bootstrap case above), never a sketch
+    # that lacks appended keys, which the probe would read as unseen
+    _drop_sketch(spark, seen_dir)
     fresh.select(F.col("_canon").alias("canon_url")).write.mode("append").parquet(
         f"{seen_dir}/urls"
     )
     to_sketch = fresh.select(F.col("_canon"))
-    dense = None
-    if had_bloom:
-        regs_tbl = spark.read.parquet(f"{seen_dir}/bloom")
-        dense = aggregate.bloom_collect(
-            regs_tbl.filter(F.col("word") >= 0), n_bits=n_bits
-        )
-    elif idx_before is not None:  # bootstrap: sketch the pre-existing index too
+    if idx_before is not None:  # bootstrap: sketch the pre-existing index too
         to_sketch = to_sketch.unionByName(
             idx_before.select(F.col("canon_url").alias("_canon"))
         )
@@ -691,15 +695,6 @@ def snapshot_overlap(
     return aggregate.bottomk_overlap(
         keyed(crawl_a), keyed(crawl_b), "canon", k, assume_unique=True
     )
-
-
-def _read_parquet_or_none(spark, path: str):
-    try:
-        df = spark.read.parquet(path)
-        df.schema  # force resolution
-        return df
-    except Exception:
-        return None
 
 
 # ---------------------------------------------------------------------------

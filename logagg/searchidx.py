@@ -75,11 +75,10 @@ import re
 import shutil
 from typing import Iterable
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from logagg.util import data_files, recover_swap, swap_dir
+from logagg.util import data_files, read_parquet_or_none, recover_swap, swap_dir
 
 # compact_index replaces these through util.swap_dir; _read_meta, which
 # every entry point that touches them runs first, heals a dead swap
@@ -226,22 +225,11 @@ def _read_meta(spark: SparkSession, index_dir: str) -> dict:
 
 def _tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
     """Max-gen tombstone per id, or ``None`` when no delete ever ran (the
-    common case — searches then skip the mask entirely)."""
-    # Hadoop FS existence probe first: one metadata RPC (any scheme)
-    # instead of paying schema-inference + AnalysisException construction
-    # on every search against a tombstone-free index
-    try:
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(  # type: ignore[union-attr]
-            f"{index_dir}/tombstones"
-        )
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(jpath):
-            return None
-    except Exception:
-        pass  # unusual scheme/py4j trouble: fall through to the read
-    try:
-        t = spark.read.parquet(f"{index_dir}/tombstones")
-    except AnalysisException:
+    common case — searches then skip the mask entirely; the existence
+    probe in :func:`logagg.util.read_parquet_or_none` keeps that case to
+    one metadata RPC per search)."""
+    t = read_parquet_or_none(spark, f"{index_dir}/tombstones")
+    if t is None:
         return None
     return t.groupBy("id").agg(F.max("dead_gen").alias("_dead_gen"))
 

@@ -523,18 +523,20 @@ def run_streaming_curate(
     curate_increment` per batch (pinned by test).
 
     Exactly-once OUTPUT via the :func:`run_streaming_frontier` ordering,
-    with the compute/commit split :func:`logagg.curate.curate_increment`
-    ``update_state=False`` provides:
+    with the two halves of :func:`logagg.curate.curate_increment` and a
+    landing between them:
 
-    1. probe-only increment (NO state writes — a probe replayed after a
-       partial md5 append would see its own hashes and silently drop the
-       whole batch, the frontier lesson)
+    1. :func:`logagg.curate.probe_increment` (NO state writes — a probe
+       replayed after a partial md5 append would see its own hashes and
+       silently drop the whole batch, the frontier lesson)
     2. land the accepted-set md5s at ``<state_dir>/_pending/batch-<id>``
        and the survivors at the per-batch outdir, both ``overwrite``
        (all-or-nothing per attempt)
-    3. :func:`logagg.curate.commit_increment_state` from the LANDED
-       parquet — idempotent: md5s and band rows already in the state are
-       anti-joined away, so a re-commit after any crash adds nothing
+    3. :func:`logagg.curate.commit_increment_state` on the LANDED
+       parquet, read back with :func:`logagg.util.read_parquet_or_none`
+       (a zero-row landing reads as ``None``) — idempotent: md5s and band
+       rows already in the state are anti-joined away, so a re-commit
+       after any crash adds nothing
     4. commit the ledger marker (:class:`logagg.checkpoint.StageLedger`,
        ``<state_dir>/_batch_ledger/batch-<id>.json``, carrying the stage
        manifest)
@@ -569,14 +571,13 @@ def run_streaming_curate(
                     if committed
                     else None
                 )
-                res = curatemod.curate_increment(
+                res = curatemod.probe_increment(
                     batch_df,
                     state_dir,
                     id_col=id_col,
                     text_col=text_col,
                     corpus=corpus,
                     near_dedup=near_dedup,
-                    update_state=False,
                     **filter_kwargs,
                 )
                 res.pending["md5"].write.mode("overwrite").parquet(land_md5)
@@ -585,7 +586,9 @@ def run_streaming_curate(
                 res.pending["md5"].unpersist()
                 res.unpersist()
             curatemod.commit_increment_state(
-                spark, state_dir, land_md5, land_surv,
+                spark, state_dir,
+                util.read_parquet_or_none(spark, land_md5),
+                util.read_parquet_or_none(spark, land_surv),
                 id_col=id_col, text_col=text_col, near_dedup=near_dedup,
             )
             n = spark.read.schema(schema).parquet(land_surv).count()

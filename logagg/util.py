@@ -1,6 +1,7 @@
 """Small shared utilities for operator lifecycle: result materialization,
-the scratch-storage contract of every iterative (fixpoint) operator, and the
-one directory swap that replaces a committed directory as a unit."""
+the scratch-storage contract of every iterative (fixpoint) operator, the
+one directory swap that replaces a committed directory as a unit, and the
+one "read this parquet dir if it is there" of every incremental store."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ from collections.abc import Iterator
 from contextlib import contextmanager
 from pathlib import Path
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -134,6 +136,31 @@ def scratch(spark: SparkSession, prefix: str, base: str | None = None) -> Iterat
         yield Scratch(spark, tmp, kept=False)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` of ``path`` under the session's Hadoop
+    configuration — metadata calls (exists, delete) on any scheme."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)  # type: ignore[union-attr]
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet dir at ``path``, or ``None`` when there is no data to
+    read: the path is missing, or it holds no data file (a zero-row write
+    can leave just ``_SUCCESS``; schema inference then fails). A Hadoop-FS
+    existence probe (one metadata RPC, any scheme) answers the common
+    missing case before any read, so it logs no Java stack trace. Every
+    other error — an unreadable or corrupt file — raises: state that cannot
+    be read is not "no state", and reading it as such would re-bootstrap
+    over it."""
+    fs, jpath = hadoop_path(spark, path)
+    if not fs.exists(jpath):
+        return None
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException:
+        return None
 
 
 def data_files(root: str | Path) -> dict[str, int]:

@@ -196,6 +196,49 @@ def test_filter_unseen_bloom_bootstraps_from_existing_index(spark, tmp_path):
         )
 
 
+def test_frontier_increment_leaves_no_stale_sketch(spark, tmp_path):
+    """An exact increment on an accelerated seen dir must not leave a
+    sketch that lacks its keys: the bloom probe reads a sketch miss as
+    provably unseen and never checks the index for it. The exact
+    increment never probes the sketch, so its geometry does not matter."""
+    seen = str(tmp_path / "seen")
+    frontier.filter_unseen_bloom(
+        _urls_df(spark, ["http://a.com/1", "http://a.com/2"]), seen,
+        n_bits=M, n_hashes=K,
+    )
+    frontier.frontier_increment(_urls_df(spark, ["http://x.com/new"]), seen)
+    probe = _urls_df(spark, ["http://x.com/new", "http://a.com/1"])
+    assert frontier.unseen_in_batch(probe, seen, n_bits=M, n_hashes=K).count() == 0
+    # the next accelerated call rebuilds the sketch from the whole index
+    got = frontier.filter_unseen_bloom(
+        _urls_df(spark, ["http://x.com/new", "http://y.com/1"]), seen,
+        n_bits=M, n_hashes=K,
+    )
+    assert [r["url"] for r in got.collect()] == ["http://y.com/1"]
+    assert frontier.unseen_in_batch(probe, seen, n_bits=M, n_hashes=K).count() == 0
+
+
+def test_commit_seen_crash_leaves_no_stale_sketch(spark, tmp_path, monkeypatch):
+    """A commit killed after its key append and before the sketch rewrite
+    leaves an index without a sketch (rebuilt by the next call), never
+    the old sketch beside an index that holds keys it lacks."""
+    seen = str(tmp_path / "seen")
+    geo = {"n_bits": M, "n_hashes": K}
+    frontier.filter_unseen_bloom(_urls_df(spark, ["http://a.com/1"]), seen, **geo)
+
+    def killed(*args, **kwargs):
+        raise RuntimeError("killed before the sketch rewrite")
+
+    monkeypatch.setattr(aggregate, "bloom_build", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        frontier.filter_unseen_bloom(_urls_df(spark, ["http://x.com/new"]), seen, **geo)
+    monkeypatch.undo()
+    probe = _urls_df(spark, ["http://x.com/new", "http://a.com/1"])
+    assert frontier.unseen_in_batch(probe, seen, **geo).count() == 0
+    assert frontier.filter_unseen_bloom(probe, seen, **geo).count() == 0
+    assert frontier.unseen_in_batch(probe, seen, **geo).count() == 0
+
+
 def test_streaming_frontier_equals_batch_and_replays(spark, tmp_path):
     """The streaming seen-set == filter_unseen_bloom applied batch-by-batch
     in file order; replay with every marker present skips cleanly; a

@@ -2,6 +2,8 @@
 against persistent md5 + MinHash indexes without re-reading the corpus;
 the accepted union must match the batch pipeline on the same docs."""
 
+from pathlib import Path
+
 import pytest
 
 from logagg import curate
@@ -40,6 +42,16 @@ def _accepted_ids(res):
     return sorted(r["doc_id"] for r in res.docs.select("doc_id").collect())
 
 
+def _assert_state(spark, state, accepted):
+    """The invariants the commit keeps (pinned for the stream in
+    test_streaming_curate.py): the md5 set is duplicate-free and the band
+    index covers exactly the accepted docs."""
+    md5 = spark.read.parquet(f"{state}/md5")
+    assert md5.count() == md5.distinct().count()
+    bands = spark.read.parquet(f"{state}/minhash/bands")
+    assert sorted(int(r["id"]) for r in bands.select("id").distinct().collect()) == accepted
+
+
 def test_incremental_matches_batch(spark, batches, tmp_path):
     b1, b2 = batches
     state = str(tmp_path / "state")
@@ -53,10 +65,12 @@ def test_incremental_matches_batch(spark, batches, tmp_path):
         "stage": "exact_dedup_incremental", "rows_in": 6, "rows_out": 5
     }
     assert res1.manifest[1]["rows_out"] == 4
+    _assert_state(spark, state, ids1)
 
     res2 = curate.curate_increment(b2, state, corpus=res1.docs, near_dedup=True)
     ids2 = _accepted_ids(res2)
     assert ids2 == [12, 15]  # 11 exact-vs-corpus, 13 near-vs-corpus, 14 exact-within
+    _assert_state(spark, state, sorted(ids1 + ids2))
 
     # the union of increments == the batch pipeline on the union
     batch = curate.curate(
@@ -73,6 +87,7 @@ def test_incremental_matches_batch(spark, batches, tmp_path):
         b3, state, corpus=res1.docs.unionByName(res2.docs), near_dedup=True
     )
     assert _accepted_ids(res3) == []
+    _assert_state(spark, state, sorted(ids1 + ids2))
 
 
 def test_incremental_stateless_filters_pass_through(spark, batches, tmp_path):
@@ -92,3 +107,27 @@ def test_incremental_near_needs_corpus(spark, batches, tmp_path):
     curate.curate_increment(b1, state, near_dedup=True)
     with pytest.raises(ValueError, match="corpus"):
         curate.curate_increment(b2, state, near_dedup=True)
+
+
+def test_unreadable_state_raises_and_is_left_alone(spark, batches, tmp_path):
+    """State that exists but cannot be read is not "no state": the call
+    must raise, not accept near-dups of the lost docs and re-bootstrap the
+    band index over them."""
+    b1, b2 = batches
+    state = Path(tmp_path / "s4")
+    res1 = curate.curate_increment(b1, str(state), near_dedup=True)
+    bands = state / "minhash" / "bands"
+    for f in bands.iterdir():
+        if f.name.endswith(".crc"):
+            f.unlink()  # else the checksum, not the parquet reader, objects
+        elif not f.name.startswith("_"):
+            f.write_bytes(b"not a parquet file")
+
+    def files():
+        return {str(f.relative_to(state)): f.read_bytes() for f in state.rglob("*")
+                if f.is_file()}
+
+    before = files()
+    with pytest.raises(Exception, match="parquet|Parquet"):
+        curate.curate_increment(b2, str(state), corpus=res1.docs, near_dedup=True)
+    assert files() == before

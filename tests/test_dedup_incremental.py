@@ -36,12 +36,13 @@ def test_incremental_equals_batch_restricted(spark, tmp_path):
     stop = dedup.minhash_index_write(corpus, idx)
 
     got1 = _pair_set(
-        dedup.minhash_lsh_dupes_incremental(inc1, corpus, idx, update_index=True)
+        dedup.minhash_lsh_dupes_incremental(inc1, corpus, idx)
     )
-    # after update_index, increment 2 sees corpus ∪ inc1 as "old"
+    dedup.minhash_index_write(inc1, idx, mode="append")
+    # after the index append, increment 2 sees corpus ∪ inc1 as "old"
     got2 = _pair_set(
         dedup.minhash_lsh_dupes_incremental(
-            inc2, corpus.unionByName(inc1), idx, update_index=True
+            inc2, corpus.unionByName(inc1), idx
         )
     )
 
