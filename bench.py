@@ -1,15 +1,17 @@
 #!/usr/bin/env python
-"""Benchmark harness.
+"""N→4N scaling proxy: the BASELINE.json north-rule pair on one box.
 
-Default mode: time the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and print ONE JSON
-line. Also runs the two-parallelism scaling proxy (same job at local[N] and
-local[4N] — the sandbox stand-in for the N→4N-executor criterion in
-BASELINE.json) and appends the evidence to BENCH.md.
+Runs the flagship e2e job (read pages → vectorized parse pruned to
+lang/warc_ts/message → broadcast enrich → per-sink hourly aggregate, the
+chain of ``__spark_entry__.entry``) over the pages ×REPLICATE, once in a
+fresh worker pinned to N = max(1, cpus // 4) cores and once pinned to
+4N = ``session.default_cpus()`` cores, and prints one JSON line with the
+rows/sec of each side and ``efficiency = (R_hi / R_lo) / (hi / lo)``
+(target ≥ 0.8). Each worker times its second pass; the sides run
+interleaved twice and each keeps its best. A report, not a gate:
+performance claims are made on perfbench.
 
-Internal: ``--scaling-worker`` runs the e2e pipeline once in a fresh JVM at
-a given master and prints {"elapsed": s, "records": n} (timed from first
-action, session/cache warm-up excluded).
+    python bench.py [--sf-dir /root/testdata/sf0.1]
 """
 
 from __future__ import annotations
@@ -17,53 +19,27 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import subprocess
 import sys
 import time
 from pathlib import Path
 
-REPO = Path(__file__).resolve().parent
-sys.path.insert(0, str(REPO))
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-REPLICATE = int(os.environ.get("BENCH_REPLICATE", "32"))
+REPLICATE = 32
+RUNS = 2
 
 
-def _sf_value(sf_dir: str) -> float:
-    name = Path(sf_dir.rstrip("/")).name
-    try:
-        return float(name.removeprefix("sf"))
-    except ValueError:
-        return -1.0
-
-
-def replicated_pages_dir(sf_dir: str, replicate: int) -> str:
-    """Materialize an N×-replicated pages directory by HARDLINKING the cache
-    parquet files under distinct names — a genuinely bigger input with ONE
-    scan branch, zero extra disk, idempotent. This is the scale-up shape a
-    production backlog has (more files, same plan), unlike the
-    union-of-N-scans replicate whose plan breadth grows with the work size
-    and confounds the ladder's per-record CPU ledger (round-4 verdict #3:
-    marginal µs/record rose with rung while each rung also carried a wider
-    union — the A/B in tools/replicate_ab.py separates the two)."""
-    import shutil
-
-    from logagg import synth
-
-    cache = synth.ensure_cache(sf_dir, expected=False)
-    src = cache / "pages.parquet"
+def replicated_pages_dir(cache: Path, replicate: int) -> str:
+    """The cache's pages parquet ×``replicate``, as hardlinks under distinct
+    names: a bigger input with one scan branch and no extra disk. The
+    ``_LINKED`` marker pins the source inventory (name + inode), so a cache
+    rebuilt in place gets a fresh link dir instead of stale inodes."""
     dst = cache / f"pages_rep{replicate}.parquet"
-    done = dst / "_LINKED"
-    files = sorted(src.glob("part-*.parquet"))
-    # the marker pins the SOURCE inventory (name + inode): ensure_cache
-    # rebuilds pages.parquet in place on a GEN_VERSION bump, and hardlinks
-    # would keep serving the old inodes' bytes — a stale-marker rep dir must
-    # be rebuilt, never trusted
+    files = sorted((cache / "pages.parquet").glob("part-*.parquet"))
     inventory = json.dumps([(f.name, os.stat(f).st_ino) for f in files])
+    done = dst / "_LINKED"
     if not done.exists() or done.read_text() != inventory:
-        if dst.exists():
-            shutil.rmtree(dst)
+        shutil.rmtree(dst, ignore_errors=True)
         dst.mkdir()
         for i in range(replicate):
             for f in files:
@@ -72,916 +48,78 @@ def replicated_pages_dir(sf_dir: str, replicate: int) -> str:
     return str(dst)
 
 
-def _pipeline(spark, sf_dir: str, replicate: int = 1, rep_mode: str = "disk"):
-    """The flagship e2e: read pages → vectorized parse → broadcast enrich →
-    per-sink hourly aggregate. Returns (records_parsed, result_df)."""
-    from pyspark.sql import functions as F
-
+def e2e(spark, sf_dir: str, replicate: int):
+    """The flagship e2e over the pages ×``replicate``; rows are exact
+    duplicates, so only the group counts scale."""
     from logagg import aggregate, enrich, parse, synth
 
     cache = synth.ensure_cache(sf_dir, expected=False)
-    path = str(cache / "pages.parquet")
-    if replicate > 1 and rep_mode == "disk":
-        # N× the input as N× hardlinked files: one scan branch, natural
-        # file-split task granularity, per-record plan cost IDENTICAL at
-        # every work size (rows are exact duplicates; the e2e groups on
-        # host/lang/bucket and counts, so duplicate urls only scale the
-        # group counts — no operator dedups by url)
-        pages = spark.read.parquet(replicated_pages_dir(sf_dir, replicate))
-        pages = pages.coalesce(2 * spark.sparkContext.defaultParallelism)
-    elif replicate > 1:
-        # legacy union-of-scans replicate (rep_mode="union"), kept for the
-        # replicate-mechanism A/B: N× the input splits → no shuffle, but the
-        # plan carries N scan branches
-        reps = [
-            spark.read.parquet(path).withColumn(
-                "url", F.concat_ws("#", "url", F.lit(str(i)))
-            )
-            for i in range(replicate)
-        ]
-        pages = reps[0]
-        for r in reps[1:]:
-            pages = pages.unionByName(r)
-        # task granularity: one scan task per ~15 files instead of per file.
-        # A single-file task holds one 2000-row Arrow batch, so the JVM
-        # decode → Python parse → JVM agg chain runs strictly serial inside
-        # the task (measured 42% core utilization at 16 cores); multi-batch
-        # tasks keep the Arrow writer thread streaming batch i+1 while
-        # Python chews batch i (utilization ≥ 70%, 16-core wall 6.5 → 5.5 s).
-        # Two waves per core for load balance.
-        pages = pages.coalesce(2 * spark.sparkContext.defaultParallelism)
-    else:
-        pages = spark.read.parquet(path)
+    pages = spark.read.parquet(replicated_pages_dir(cache, replicate))
+    # two multi-file tasks per core: the Arrow writer streams batch i+1
+    # while the Python worker parses batch i
+    pages = pages.coalesce(2 * spark.sparkContext.defaultParallelism)
     host_geo, lang_locale = enrich.load_lookups(spark, cache)
-    # hand-pruned UDF output: the hourly sink aggregate reads only
-    # host(url)/lang/warc_ts/message — Catalyst cannot prune the other 7
-    # columns (incl. the wide extracted_text) through mapInPandas, and not
-    # Arrow-shipping them is ~60% less parse-output bandwidth
+    # Catalyst cannot prune through mapInPandas: ship only what the
+    # aggregate reads
     parsed = parse.parsed_records(pages, columns=["lang", "warc_ts", "message"])
-    enriched = enrich.enrich(parsed, host_geo, lang_locale)
-    return aggregate.sink_agg_hourly(enriched)
+    return aggregate.sink_agg_hourly(enrich.enrich(parsed, host_geo, lang_locale))
 
 
-def _system_cpu_busy() -> tuple[float, float]:
-    """System-wide (busy_cpu_seconds, steal_seconds) from /proc/stat —
-    sampled at both ends of each rung's timed window so co-tenant load is
-    MEASURED during the moment it matters, per rung, instead of asserted
-    from a post-ladder probe (round-4 verdict #2)."""
-    hz = os.sysconf("SC_CLK_TCK")
-    with open("/proc/stat") as f:
-        parts = f.readline().split()[1:]
-    vals = [int(x) / hz for x in parts]
-    idle = vals[3] + (vals[4] if len(vals) > 4 else 0.0)  # idle + iowait
-    steal = vals[7] if len(vals) > 7 else 0.0
-    return sum(vals) - idle, steal
-
-
-def scaling_worker(master: str, sf_dir: str, replicate: int, rep_mode: str) -> None:
-    from logagg.session import get_spark
-    from logagg import synth
-
-    synth.ensure_cache(sf_dir, expected=False)  # warm cache before timing
-    spark = get_spark(app_name=f"bench-{master}", master=master)
+def worker(cores: int, sf_dir: str) -> None:
+    """Pin to ``cores`` CPUs (the JVM inherits it, as an executor owns its
+    cores), run one warm pass of the identical plan (Python worker spawn,
+    codegen JIT), then time the second and print {"elapsed", "records"}."""
+    os.sched_setaffinity(0, sorted(os.sched_getaffinity(0))[:cores])
     from pyspark.sql import functions as F
 
-    # warm-up = one full pass of the IDENTICAL job, then time the second
-    # pass (steady-state measurement). Rationale, measured per-thread on
-    # this box: (a) each Python daemon fork pays ~1.8 s of imports on its
-    # first task — a small warmup spawns the whole pool; (b) JIT compiler
-    # threads burn ~40 CPU-s at 16 cores when the plan's generated
-    # whole-stage-codegen classes compile inside the timed window (~38% of
-    # a short job's CPU budget), and only an identical plan reuses them.
-    # On the 10^12-row production job the criterion models, both are noise;
-    # timing the second pass is how sustained throughput is measured.
-    agg_warm = _pipeline(spark, sf_dir, replicate, rep_mode)
-    agg_warm.agg(F.sum("n_rows")).collect()
-    agg = _pipeline(spark, sf_dir, replicate, rep_mode)
-    cpu0 = _proc_tree_cpu_split()
-    sys0, steal0 = _system_cpu_busy()
-    t0 = time.time()
-    row = agg.agg(F.sum("n_rows").alias("records")).collect()[0]
-    elapsed = time.time() - t0
-    sys1, steal1 = _system_cpu_busy()
-    cpu1 = _proc_tree_cpu_split()
-    own = cpu1["total"] - cpu0["total"]
-    # capacity taken by others INSIDE this timed window, decomposed:
-    # cotenant = other processes on this box (system busy minus steal minus
-    # this process tree), steal = hypervisor giving our vCPUs away. Units
-    # are cores (1.0 = one core lost for the whole window).
-    steal = steal1 - steal0
-    cotenant = max(0.0, (sys1 - sys0) - steal - own)
-    print(
-        json.dumps(
-            {
-                "elapsed": elapsed,
-                "records": int(row["records"]),
-                "cpu_seconds": round(own, 2),
-                "cpu_jvm": round(cpu1["jvm"] - cpu0["jvm"], 2),
-                "cpu_py": round(cpu1["pyworker"] - cpu0["pyworker"], 2),
-                "cotenant_cores": round(cotenant / elapsed, 2) if elapsed > 0 else None,
-                "steal_cores": round(steal / elapsed, 2) if elapsed > 0 else None,
-                "rep_mode": rep_mode,
-            }
-        )
-    )
-
-
-SCALING_RUNS = int(os.environ.get("BENCH_SCALING_RUNS", "2"))
-
-
-def _class_of(pid: int) -> str:
-    try:
-        with open(f"/proc/{pid}/cmdline", "rb") as f:
-            cmd = f.read().replace(b"\x00", b" ").decode(errors="replace")
-    except OSError:
-        return "other"
-    if "java" in cmd or "spark-class" in cmd:
-        return "jvm"
-    if "pyspark.daemon" in cmd or "pyspark.worker" in cmd:
-        return "pyworker"
-    return "other"
-
-
-def _proc_tree_cpu_split() -> dict[str, float]:
-    """CPU seconds (utime+stime) of this process and every live descendant,
-    split into JVM vs Python-worker vs other. /proc-based; used to report
-    achieved parallelism = Δcpu/Δwall for the timed window — a measurement
-    the box's other tenants cannot pollute (unlike wall-clock) — and to
-    attribute overhead growth to the right layer."""
-    hz = os.sysconf("SC_CLK_TCK")
-    me = os.getpid()
-    procs: dict[int, tuple[int, float]] = {}  # pid -> (ppid, cpu_s)
-    for entry in os.listdir("/proc"):
-        if not entry.isdigit():
-            continue
-        try:
-            with open(f"/proc/{entry}/stat") as f:
-                stat = f.read()
-        except OSError:
-            continue
-        rp = stat.rindex(")")
-        fields = stat[rp + 2 :].split()
-        ppid = int(fields[1])
-        cpu = (int(fields[11]) + int(fields[12])) / hz  # utime + stime
-        procs[int(entry)] = (ppid, cpu)
-    mine = {me}
-    changed = True
-    while changed:
-        changed = False
-        for pid, (ppid, _) in procs.items():
-            if ppid in mine and pid not in mine:
-                mine.add(pid)
-                changed = True
-    out = {"total": 0.0, "jvm": 0.0, "pyworker": 0.0, "other": 0.0}
-    for pid in mine:
-        if pid not in procs:
-            continue
-        cpu = procs[pid][1]
-        out["total"] += cpu
-        out[_class_of(pid)] += cpu
-    return out
-
-
-def _proc_tree_cpu_seconds() -> float:
-    return _proc_tree_cpu_split()["total"]
-
-
-def _hw_worker(args: tuple) -> float:
-    core, texts = args
-    os.sched_setaffinity(0, {core})
-    from logagg import refparse
-
-    t0 = os.times()
-    for t in texts:
-        refparse.parse_text(t)
-    t1 = os.times()
-    return (t1.user + t1.system) - (t0.user + t0.system)
-
-
-def hw_inflation_probe() -> dict:
-    """Fixed-work hardware probe: the SAME pure-Python parse work (the
-    pipeline's dominant kernel) on each of 1/4/16 pinned cores, measuring
-    per-worker CPU-seconds. If cpu-per-unit-work stays flat while cores
-    quadruple, the hardware scales cleanly (no SMT sharing, no frequency
-    scaling, no bandwidth wall for this workload) and any wall-clock
-    efficiency loss is attributable to the engine/harness — and vice versa.
-    Interleaved best-of-2 per rung (tenant-shared box)."""
-    import multiprocessing as mp
-
-    import pyarrow.parquet as pq
-
-    from logagg import synth
-
-    cache = synth.ensure_cache("/root/testdata/sf0.001", expected=False)
-    texts = pq.read_table(cache / "pages.parquet", columns=["text"]).column("text").to_pylist()
-    texts = texts * 6
-    best: dict[int, float] = {}
-    for _ in range(2):
-        for procs in (1, 4, 16):
-            with mp.Pool(procs) as p:
-                res = p.map(_hw_worker, [(i, texts) for i in range(procs)])
-            cpu = sum(res) / procs
-            if procs not in best or cpu < best[procs]:
-                best[procs] = cpu
-    return {
-        "cpu_sec_per_worker": {str(k): round(v, 3) for k, v in best.items()},
-        "inflation_vs_1core": {str(k): round(v / best[1], 3) for k, v in best.items()},
-    }
-
-
-REP_MODE = os.environ.get("BENCH_REP_MODE", "disk")
-
-
-def _one_worker(
-    n: int, sf_dir: str, replicate: int | None = None, rep_mode: str | None = None
-) -> dict:
-    """Run the pipeline in a fresh JVM pinned to exactly n CPUs.
-
-    taskset emulates what a cluster gives an executor: local[n] without
-    pinning lets the JVM's scan/Arrow/GC threads borrow extra physical
-    cores, which flatters small configs and corrupts the N→4N ratio."""
-    cmd = [
-        "taskset",
-        "-c",
-        f"0-{n - 1}" if n > 1 else "0",
-        sys.executable,
-        __file__,
-        "--scaling-worker",
-        f"--master=local[{n}]",
-        f"--sf-dir={sf_dir}",
-        f"--replicate={replicate if replicate is not None else REPLICATE}",
-        f"--rep-mode={rep_mode or REP_MODE}",
-    ]
-    proc = subprocess.run(cmd, capture_output=True, text=True, timeout=1800)
-    return json.loads(proc.stdout.strip().splitlines()[-1])
-
-
-# 32 is intentionally absent: with a ~2 s fixed floor per ~5 s of work and
-# tenant noise, the top rung carries no signal the 16-core rung lacks, and
-# each extra config is ~90 s of bench budget (3 fresh JVMs)
-SCALING_CONFIGS = (1, 2, 4, 8, 16)
-
-
-def rep_for(n: int) -> int:
-    """Work size per rung: REPLICATE up to 4 cores, then scaled with the
-    core count (2× at 8, 4× at 16) so the high rungs run ~30 s and the
-    ~2 s fixed per-job floor stops costing 20% of measured efficiency.
-    Efficiency compares rows/sec, which normalizes across work sizes —
-    this is how a production job behaves (4N executors get a 4N-sized
-    backlog, not a 5-second toy), and the floor model still reports the
-    per-rung floor explicitly."""
-    return REPLICATE * max(1, n // 4)
-
-
-# second work size per rung for the floor model: elapsed = floor + rep·w
-# (two replicate levels solve for the fixed per-job floor — AQE planning,
-# broadcast build, stage barriers, final-agg+collect — per rung, measured
-# instead of asserted)
-def floor_rep_for(n: int) -> int:
-    return max(1, rep_for(n) // 4)
-
-
-def run_scaling(sf_dir: str) -> dict:
-    """Strong-scaling ladder, each config pinned to exactly its core count
-    (the cluster-executor contract: 4N executors own 4N cores), measured at
-    steady state (identical-plan warm pass first — see scaling_worker).
-    Efficiency is reported for every N→4N pair; the headline pair is 1→4,
-    where both ends run long enough to amortize the fixed per-job floor
-    that dominates 5-second jobs at high N but is noise on hour-scale
-    production runs. Repeats interleave configs; per-config best is kept
-    (tenant-shared box: identical runs swing 2×).
-
-    FLOOR ATTRIBUTION (all measured, in-artifact): every rung also runs the
-    identical job at ¼ its replicate. With elapsed = floor +
-    rep·w, the two points solve for the rung's fixed floor and the marginal
-    per-record cost — so the artifact itself shows how much of any high-rung
-    efficiency loss is the amortizable per-job constant vs real per-record
-    inflation. ``efficiency_floor_adjusted`` compares work time (elapsed −
-    floor); ``cpu_us_per_record_marginal`` applies the same two-point model
-    to the /proc CPU ledger (Δcpu/Δrecords), isolating per-record CPU from
-    fixed startup CPU (JIT residue, planning) that wall-noise can't touch.
-    """
-    runs: dict[int, list[dict]] = {n: [] for n in SCALING_CONFIGS}
-    floor_runs: dict[int, list[dict]] = {n: [] for n in SCALING_CONFIGS}
-    for _ in range(SCALING_RUNS):
-        for n in SCALING_CONFIGS:
-            runs[n].append(_one_worker(n, sf_dir, replicate=rep_for(n)))
-        for n in SCALING_CONFIGS:
-            floor_runs[n].append(_one_worker(n, sf_dir, replicate=floor_rep_for(n)))
-    best = {n: min(rs, key=lambda r: r["elapsed"]) for n, rs in runs.items()}
-    best_f = {n: min(rs, key=lambda r: r["elapsed"]) for n, rs in floor_runs.items()}
-    rate = {n: best[n]["records"] / best[n]["elapsed"] for n in SCALING_CONFIGS}
-
-    floor: dict[int, float] = {}
-    work_rate: dict[int, float] = {}
-    floor_reliable: dict[int, bool] = {}
-    cpu_marginal: dict[int, float | None] = {}
-    for n in SCALING_CONFIGS:
-        R, r_ = float(rep_for(n)), float(floor_rep_for(n))
-        e_full, e_small = best[n]["elapsed"], best_f[n]["elapsed"]
-        # two-point solve needs two distinct work sizes (REPLICATE > 1)
-        f = (e_small * R - e_full * r_) / (R - r_) if R > r_ else 0.0
-        # tenant-noise guard: best-of runs are picked independently per work
-        # size, so a slow quarter-run can push the solved floor toward (or
-        # past) the full elapsed — a floor eating >50% of the job is not a
-        # credible fixed constant; fall back to floor=0 (work = raw elapsed,
-        # adjusted efficiency degenerates to the raw one) and flag it
-        floor_reliable[n] = R > r_ and 0.0 <= f <= 0.5 * e_full
-        floor[n] = f if floor_reliable[n] else 0.0
-        # floor-adjusted throughput: records over time actually spent on work
-        work_rate[n] = best[n]["records"] / (e_full - floor[n])
-        c_full, c_small = best[n].get("cpu_seconds"), best_f[n].get("cpu_seconds")
-        rec_full, rec_small = best[n]["records"], best_f[n]["records"]
-        if c_full and c_small and rec_full > rec_small:
-            marginal = 1e6 * (c_full - c_small) / (rec_full - rec_small)
-            absolute = 1e6 * c_full / rec_full
-            # plausibility guard (same spirit as floor_reliable): the two
-            # best-of points are picked independently, so tenant noise can
-            # produce a negative or wildly inflated marginal — publish null
-            # rather than a number the model can't support
-            cpu_marginal[n] = (
-                round(marginal, 1) if c_full > c_small and 0.0 < marginal <= 3.0 * absolute
-                else None
-            )
-        else:
-            cpu_marginal[n] = None
-
-    def _pair(lo: int, hi: int) -> dict:
-        return {
-            "cores_lo": lo,
-            "cores_hi": hi,
-            "rows_per_sec_lo": round(rate[lo]),
-            "rows_per_sec_hi": round(rate[hi]),
-            "elapsed_lo": round(best[lo]["elapsed"], 2),
-            "elapsed_hi": round(best[hi]["elapsed"], 2),
-            # throughput-based: exact regardless of per-rung work size
-            "efficiency": round((rate[hi] / rate[lo]) / (hi / lo), 3),
-            "efficiency_floor_adjusted": round(
-                (work_rate[hi] / work_rate[lo]) / (hi / lo), 3
-            ),
-        }
-
-    pairs = [_pair(lo, lo * 4) for lo in (1, 2, 4)]
-    return {
-        **_pair(1, 4),  # headline N→4N pair (longest runs → least floor/noise)
-        "pairs": pairs,
-        "ladder": {
-            str(n): {
-                "elapsed": round(best[n]["elapsed"], 2),
-                "rows_per_sec": round(rate[n]),
-                "cpu_seconds": best[n].get("cpu_seconds"),
-                "cpu_jvm": best[n].get("cpu_jvm"),
-                "cpu_py": best[n].get("cpu_py"),
-                "avg_parallelism": (
-                    round(best[n]["cpu_seconds"] / best[n]["elapsed"], 2)
-                    if best[n].get("cpu_seconds")
-                    else None
-                ),
-                "cpu_us_per_record": (
-                    round(1e6 * best[n]["cpu_seconds"] / best[n]["records"], 1)
-                    if best[n].get("cpu_seconds")
-                    else None
-                ),
-                "cpu_us_per_record_marginal": cpu_marginal[n],
-                # co-tenant load measured INSIDE this rung's timed window
-                # (foreign busy cores, averaged over the window) — per-rung
-                # attribution, not a post-hoc probe
-                "cotenant_cores": best[n].get("cotenant_cores"),
-                "steal_cores": best[n].get("steal_cores"),
-                "replicate": rep_for(n),
-                "records": best[n]["records"],
-                "floor_sec": round(floor[n], 2),
-                "floor_reliable": floor_reliable[n],
-                "work_sec": round(best[n]["elapsed"] - floor[n], 2),
-                "floor_elapsed_small": round(best_f[n]["elapsed"], 2),
-            }
-            for n in SCALING_CONFIGS
-        },
-        "floor_model": {
-            "replicates": {str(n): [rep_for(n), floor_rep_for(n)] for n in SCALING_CONFIGS},
-            "note": (
-                "elapsed = floor + rep*w solved per rung from the two work "
-                "sizes; replicate scales with the rung (2x at 8 cores, 4x at "
-                "16) so high-rung jobs run long enough to amortize the floor"
-            ),
-        },
-        "all_elapsed": {str(n): [round(r["elapsed"], 2) for r in runs[n]] for n in SCALING_CONFIGS},
-        "all_elapsed_small": {
-            str(n): [round(r["elapsed"], 2) for r in floor_runs[n]] for n in SCALING_CONFIGS
-        },
-        # every sample's in-window co-tenant load, aligned with all_elapsed —
-        # a slow sample with high cotenant_cores is attributed, not asserted
-        "all_cotenant": {
-            str(n): [r.get("cotenant_cores") for r in runs[n]] for n in SCALING_CONFIGS
-        },
-        "all_cotenant_small": {
-            str(n): [r.get("cotenant_cores") for r in floor_runs[n]] for n in SCALING_CONFIGS
-        },
-        "rep_mode": REP_MODE,
-        "records": best[SCALING_CONFIGS[-1]]["records"],
-        "hw_probe": hw_inflation_probe(),
-    }
-
-
-# headline queries: name -> (callable(spark, sf_dir) -> DataFrame, action)
-def _headline():
-    import __spark_entry__ as entrymod
-
-    qs = entrymod.queries()
-    count = lambda df: df.count()  # noqa: E731
-    collect = lambda df: len(df.collect())  # noqa: E731
-
-    def pairs_fresh(spark, sf_dir):
-        # best-of-2 honesty: without this, the second timed pass would be a
-        # memo hit (~0.2 s) instead of the real pair computation. The memo
-        # is left populated afterwards, so dedup_clusters still reuses the
-        # session's pair list (its documented pipeline shape).
-        entrymod._PAIRS_MEMO.clear()
-        return qs["dedup_shingle_pairs"](spark, sf_dir)
-
-    def curate_run(spark, sf_dir):
-        from logagg import curate as cur
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return cur.curate(
-            docs,
-            redact=True,
-            quality_min=0.05,
-            repetition_limits=cur.DEFAULT_REPETITION_LIMITS,
-            exact_dedup=True,
-            near_dedup=True,
-            pack_capacity=4096,
-        ).docs
-
-    def count_unpersist(df):
-        # release the pipeline's final-stage cache so the next best-of
-        # pass (and the rest of the bench) starts cold
-        n = df.count()
-        df.unpersist()
-        return n
-
-    def lm_run(spark, sf_dir):
-        # train + score every pass (no memo): the timed number is the real
-        # train-the-LM-then-score-the-corpus pipeline
-        from logagg import lm as lmmod
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        model = lmmod.train_lm(docs)
-        return lmmod.doc_perplexity(docs, model)
-
-    def bpe_run(spark, sf_dir):
-        from logagg import bpe as bpemod
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        model = bpemod.train_bpe(docs, n_merges=200)
-        return bpemod.bpe_encode(docs, model)
-
-    def warc_run(spark, sf_dir):
-        # crawl-ingest shape: scan .warc.gz files (one task per file), frame
-        # + decode every record in one Arrow pass, roll up per record type.
-        # ensure_warc_cache is idempotent: pass 1 may pay one-time corpus
-        # generation, best-of-2 reports the clean pass.
-        from pyspark.sql import functions as F
-
-        from logagg import warc as warcmod
-
-        wdir = warcmod.ensure_warc_cache(sf_dir)
-        recs = warcmod.read_warc(
-            spark, str(wdir), record_types=None, emit_summary=True
-        )
-        return recs.groupBy("warc_type").agg(
-            F.count("*").alias("n"),
-            F.sum(F.length("payload")).alias("payload_bytes"),
-            F.sum("n_bad").alias("n_bad"),
-        )
-
-    def linkrank_run(spark, sf_dir):
-        # crawl-graph shape: outlink extraction (map-only Arrow pass over
-        # html) → host edge rollup → distributed PageRank at a FIXED
-        # 20-iteration budget (the production host-rank contract —
-        # published web host ranks are fixed-budget power iterations;
-        # tol=0 makes the work deterministic instead of convergence-
-        # dependent). The synthetic pages carry no <a> tags, so a
-        # deterministic url-hash footer link is concatenated JVM-side
-        # first (same recipe as the corpus test) — extraction still
-        # parses every page's html.
-        import tempfile
-
-        from pyspark.sql import functions as F
-
-        from logagg import linkgraph as lg
-
-        pages = entrymod._pages(spark, sf_dir)
-        footer = F.concat(
-            F.lit(b'<a href="http://h'),
-            F.lpad(
-                (F.crc32(F.col("url").cast("binary")) % 200).cast("string"), 3, "0"
-            ),
-            F.lit(b'.example.com/">next</a>'),
-        )
-        linked = pages.withColumn("html", F.concat("html", footer.cast("binary")))
-        edges = lg.host_graph(lg.extract_links(linked))
-        out = tempfile.mkdtemp(prefix="logagg-bench-pr-")
-        return lg.pagerank(
-            edges,
-            tol=0.0,
-            max_iter=20,
-            on_max_iter="return",
-            materialize="path",
-            out_path=f"{out}/ranks",
-        )
-
-    def bm25_run(spark, sf_dir):
-        # index-build + query shape: tokenize the document corpus, land the
-        # term-bucketed postings, then one ranked retrieval off the index.
-        import tempfile
-
-        from pyspark.sql import functions as F
-
-        from logagg import searchidx as si
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            F.col("doc_id").alias("id"), "text"
-        )
-        out = tempfile.mkdtemp(prefix="logagg-bench-bm25-")
-        si.build_index(docs, f"{out}/idx", num_buckets=32)
-        return si.bm25_search(spark, f"{out}/idx", "spark data pipeline", k=20)
-
-    def tpl_run(spark, sf_dir):
-        # crawl-diagnostics shape: distinct urls → pure-Catalyst template
-        # projection → two host-keyed aggs (trap mining over the corpus)
-        from logagg import frontier as fr
-
-        return fr.url_templates(
-            entrymod._pages(spark, sf_dir).select("url"), min_pages=20
-        )
-
-    def hostbp_run(spark, sf_dir):
-        # host-frequency boilerplate line cut over the full pages corpus:
-        # posexplode → per-(host, digest) distinct-page count → digest
-        # join → per-page reassembly, all Catalyst
-        from logagg import textstats as ts
-
-        return ts.strip_host_boilerplate(
-            entrymod._pages(spark, sf_dir).select("url", "text")
-        )
-
-    def hh_run(spark, sf_dir):
-        # huge-key-space top-k: per-partition Misra-Gries candidates
-        # (map-only Arrow pass) + broadcast exact recount — the shuffle
-        # carries <= capacity x partitions rows, not one row per key.
-        # Hosts, not urls: the corpus urls are distinct by construction, so
-        # the url stream has NO heavy hitters and MG correctly returns none.
-        from pyspark.sql import functions as F
-
-        from logagg import aggregate as agg
-
-        hosts = entrymod._pages(spark, sf_dir).select(
-            F.try_parse_url("url", F.lit("HOST")).alias("host")
-        )
-        return agg.heavy_hitters(hosts, "host", k=20, capacity=256)
-
-    def dsir_run(spark, sf_dir):
-        # DSIR selection shape: two bounded model fits (partial+final agg,
-        # shuffle <= buckets rows) + one broadcast map-only scoring pass +
-        # TakeOrdered top-k. Target = a content-independent 1-in-20 slice.
-        from pyspark.sql import functions as F
-
-        from logagg import dsir
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            F.col("doc_id").cast("string").alias("doc_id"), "text"
-        )
-        target = docs.filter(
-            F.crc32(F.col("doc_id").cast("binary")) % 20 == 0
-        ).select("text")
-        return dsir.dsir_select(docs, target, k=100, buckets=10_000)
-
-    def c4_run(spark, sf_dir):
-        # C4 line/doc heuristics over the full pages corpus: one Catalyst
-        # projection (line filter + sentence count), zero shuffles. The
-        # log-styled corpus has no terminal punctuation (every doc would
-        # drop, rows=0), so a deterministic Catalyst doctor appends '.' to
-        # every even line first — the op then exercises keeps AND drops.
-        from pyspark.sql import functions as F
-
-        from logagg import textstats as ts
-
-        pages = entrymod._pages(spark, sf_dir).select("url", "text")
-        doctored = pages.withColumn(
-            "text",
-            F.array_join(
-                F.transform(
-                    F.split("text", "\n"),
-                    lambda ln, i: F.when(i % 2 == 0, F.concat(ln, F.lit("."))).otherwise(ln),
-                ),
-                "\n",
-            ),
-        )
-        return ts.c4_filters(doctored, min_sentences=1)
-
-    def bloom_run(spark, sf_dir):
-        # continuous-crawl seen-set shape: bootstrap the exact index +
-        # bloom sketch from half the corpus urls, then filter a full batch
-        # (half dup, half new) — the probe is map-only, only
-        # bloom-positives reach the anti-join. Fresh seen-dir per pass so
-        # best-of-2 times the same work.
-        import tempfile
-
-        from pyspark.sql import functions as F
-
-        from logagg import frontier as fr
-
-        urls = entrymod._pages(spark, sf_dir).select("url")
-        seen = tempfile.mkdtemp(prefix="logagg-bench-bloom-") + "/seen"
-        fr.filter_unseen_bloom(
-            urls.filter(F.crc32(F.col("url").cast("binary")) % 2 == 0), seen
-        ).count()
-        return fr.filter_unseen_bloom(urls, seen)
-
-    def wrs_run(spark, sf_dir):
-        # exact-k weighted sampling over the full pages corpus: Catalyst
-        # quality weights + ln(u)/w rank, TakeOrdered plan (per-partition
-        # heaps, k-row driver merge) — url-keyed, no dense-id assumption
-        from pyspark.sql import functions as F
-
-        from logagg import mix
-        from logagg import textstats as ts
-
-        pages = entrymod._pages(spark, sf_dir).select(
-            "url",
-            (ts.quality_score(F.col("text"), F.length("text")) + F.lit(1e-6)).alias(
-                "w"
-            ),
-        )
-        return mix.weighted_sample(pages, "w", 1000, id_col="url")
-
-    def pca_run(spark, sf_dir):
-        # embedding reduction shape: one bounded moment agg (<= d^2+d+1
-        # rows/batch) + driver eigh + one broadcast zero-shuffle GEMM
-        # projection pass with whitening
-        from logagg import similarity as sim
-
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        model = sim.pca_fit(emb, 16)
-        return sim.pca_project(emb, model, whiten=True)
-
-    return {
-        "parse_records": (qs["parse_records"], count),
-        "bloom_frontier_filter": (bloom_run, count),
-        "weighted_sample_quality": (wrs_run, collect),
-        "pca_fit_project": (pca_run, count),
-        "heavy_hitters_hosts": (hh_run, collect),
-        "dsir_select": (dsir_run, collect),
-        "c4_filters": (c4_run, count),
-        "curate_e2e": (curate_run, count_unpersist),
-        "sink_agg_hourly": (qs["sink_agg_hourly"], count),
-        "host_agg_salted": (qs["host_agg_salted"], collect),
-        "route_counts": (qs["route_counts"], collect),
-        "enrich_geo_counts": (qs["enrich_geo_counts"], collect),
-        "pages_langid": (qs["pages_langid"], count),
-        "dedup_shingle_pairs": (pairs_fresh, collect),
-        "dedup_minhash_lsh": (qs["dedup_minhash_lsh"], collect),
-        "ann_topk_numpy": (qs["ann_topk_numpy"], collect),
-        "html_meta": (qs["html_meta"], count),
-        "media_decode_stub": (qs["media_decode_stub"], count),
-        "doc_fingerprints": (qs["doc_fingerprints"], count),
-        "dedup_clusters": (qs["dedup_clusters"], collect),
-        "doc_hash_split": (qs["doc_hash_split"], collect),
-        "lm_train_score": (lm_run, count),
-        "bpe_train_encode": (bpe_run, count),
-        "warc_ingest": (warc_run, collect),
-        "linkgraph_pagerank": (linkrank_run, count),
-        "bm25_build_search": (bm25_run, collect),
-        "url_templates": (tpl_run, collect),
-        "host_boilerplate_strip": (hostbp_run, count),
-        "tpch_q1": (qs["tpch_q1"], collect),
-        "tpch_q9_profit": (qs["tpch_q9_profit"], collect),
-        "grok_error_codes": (qs["grok_error_codes"], count),
-        "grok_stack_frames": (qs["grok_stack_frames"], collect),
-        "orders_by_region": (qs["orders_by_region"], collect),
-        "events_hourly": (qs["events_hourly"], count),
-        "events_exact_stats": (qs["events_exact_stats"], collect),
-        "user_sessions": (qs["user_sessions"], count),
-        "user_session_windows": (qs["user_session_windows"], count),
-        "media_frame_sample": (qs["media_frame_sample"], count),
-        "media_resize": (qs["media_resize"], count),
-        "doc_bpe_token_stats": (qs["doc_bpe_token_stats"], collect),
-        "signup_cohorts": (qs["signup_cohorts"], collect),
-        "documents_profile": (qs["documents_profile"], collect),
-    }
-
-
-def write_bench_md(result: dict) -> None:
-    lines = [
-        "# BENCH — logagg",
-        "",
-        f"sf_dir: `{result['sf_dir']}` (sf={result['sf']}), session `local[{CPUS}]`,",
-        f"shuffle.partitions={CPUS}, AQE on, Arrow on. Generated by `bench.py`.",
-        "",
-        "## Headline query timings (seconds)",
-        "",
-        "| query | sec |",
-        "|---|---|",
-    ]
-    for k, v in result["queries"].items():
-        lines.append(f"| {k} | {v} |")
-    s = result["scaling"]
-    hw = s["hw_probe"]
-    lines += [
-        "",
-        "## Scaling proxy (BASELINE.json two-cluster-size criterion)",
-        "",
-        "Same e2e job — read pages → vectorized parse → broadcast enrich →",
-        f"per-sink hourly aggregate. Input = pages ×replicate (×{REPLICATE}",
-        f"up to 4 cores, ×{rep_for(8)} at 8, ×{rep_for(16)} at 16 — work",
-        "scales with the rung so every timed job runs long enough to",
-        "amortize the ~2 s per-job floor; efficiency compares rows/sec,",
-        f"which is work-size-free). Replication mode: **{REP_MODE}** —",
-        "'disk' hardlinks the cache parquet N× under distinct names (one",
-        "scan branch, a genuinely bigger input, per-record plan cost",
-        "identical at every work size); 'union' is the legacy N-branch",
-        "union-of-scans. Either way the scan is coalesced to 2 tasks per",
-        "core so each task streams multiple Arrow batches and the",
-        "JVM-decode → Python-parse pipeline overlaps. Fresh JVM per run,",
-        "each config **pinned with",
-        "taskset to exactly its core count** (the cluster contract: 4N",
-        "executors own 4N cores), measured at **steady state**: one",
-        "identical-plan warm pass first (spawns + imports the Python worker",
-        "pool, compiles the plan's generated code — both one-time costs a",
-        "10^12-row production job amortizes to nothing), then the timed",
-        f"pass. Best of {SCALING_RUNS} interleaved runs per rung:",
-        "",
-        "| cores (pinned) | ×rep | records | elapsed (s) | rows/sec | cpu-sec | jvm | py | avg parallelism | cpu µs/record | µs/record (marginal) | co-tenant cores (in-window) | floor (s) | work (s) |",
-        "|---|---|---|---|---|---|---|---|---|---|---|---|---|---|",
-    ]
-    for n, row in s["ladder"].items():
-        lines.append(
-            f"| {n} | {row['replicate']} | {row['records']:,} | "
-            f"{row['elapsed']} | {row['rows_per_sec']:,} | "
-            f"{row['cpu_seconds']} | {row['cpu_jvm']} | {row['cpu_py']} | "
-            f"{row['avg_parallelism']} | {row['cpu_us_per_record']} | "
-            f"{row['cpu_us_per_record_marginal']} | {row.get('cotenant_cores')} | "
-            f"{row['floor_sec']} | {row['work_sec']} |"
-        )
-    lines += [
-        "",
-        "### Floor attribution (measured, not asserted)",
-        "",
-        "Every rung also runs the identical job at ¼ its replicate;",
-        "`elapsed = floor + rep·w` solved from the two points",
-        "gives the rung's fixed per-job floor (AQE planning, broadcast build,",
-        "stage barriers, final-agg + collect) and the marginal per-record",
-        "cost. On a production run hours long the floor amortizes to zero, so",
-        "`work`-based efficiency is the cluster-relevant number; the raw",
-        "wall-clock column is reported unretouched beside it. The marginal",
-        "cpu µs/record column is the same two-point model on the /proc CPU",
-        "ledger — if it stays flat up the ladder, per-record CPU does not",
-        "inflate with parallelism and any cpu-µs/record growth in the",
-        "absolute column is fixed startup CPU, not scaling loss.",
-        "",
-        "| N→4N pair | wall-clock efficiency = (R_4N/R_N)/4 | floor-adjusted (work-time) |",
-        "|---|---|---|",
-    ]
-    for p in s["pairs"]:
-        mark = " **(headline)**" if (p["cores_lo"], p["cores_hi"]) == (1, 4) else ""
-        lines.append(
-            f"| {p['cores_lo']}→{p['cores_hi']} | {p['efficiency']}{mark} | "
-            f"{p['efficiency_floor_adjusted']} |"
-        )
-    infl = hw["inflation_vs_1core"]
-    lines += [
-        "",
-        f"**Headline N→4N wall-clock efficiency (1→4 cores): {s['efficiency']}**",
-        "(target ≥ 0.8 per BASELINE.json). The 1→4 pair carries the longest",
-        "runs and is least distorted by the per-job floor and tenant noise.",
-        "",
-        "### Why these numbers are what they are (measured)",
-        "",
-        "* **The hardware scales cleanly.** Fixed-work probe (the pipeline's",
-        "  own pure-Python parse kernel, same work per worker, pinned): cpu",
-        f"  per unit of work at 1/4/16 busy cores = {hw['cpu_sec_per_worker']}",
-        f"  → inflation {infl} (≈1.0 = flat). No SMT sharing, no frequency",
-        "  scaling, no bandwidth wall for this workload — so wall-clock",
-        "  efficiency losses are the engine/harness's to explain, and the",
-        "  round-1 'hardware ceiling' narrative was wrong.",
-        "* **Cold-start costs were the round-1 CPU inflation (diagnosed",
-        "  round 2, stays excluded by design).** Per-thread",
-        "  /proc attribution showed (a) each Python daemon fork pays ~1.8 s",
-        "  of imports on its first task (15 unwarmed workers ≈ 27 CPU-s",
-        "  inside a 16-core timed window), and (b) JIT compiler threads burn",
-        "  ~40 CPU-s at 16 cores when the plan's generated code compiles",
-        "  in-window (~38% of a short job's CPU budget). Steady-state",
-        "  measurement removes both; cpu µs/record is now ~flat up the",
-        "  ladder (table above), matching how a long production job behaves.",
-        "* **The residual high-rung gap is a fixed per-job floor** of ~2-3 s",
-        "  (AQE planning, broadcast build, stage barriers, final-agg +",
-        "  collect): at 16 cores the whole job is ~5 s, so the floor caps",
-        "  measurable wall-clock efficiency there; on hour-scale runs it is",
-        "  noise. The jvm/py CPU split column shows the remaining work is",
-        "  dominated by the Python parse kernel (flat per record) plus a",
-        "  JVM share that no longer grows with parallelism.",
-        "* tenant sharing — identical back-to-back runs swing up to 2×.",
-        "  Co-tenant load is now measured INSIDE each rung's timed window",
-        "  (cotenant_cores column: foreign busy cores averaged over the",
-        "  window; steal_cores = hypervisor-stolen capacity), so a slow",
-        "  rung is attributed at the moment it happened, not asserted from",
-        "  a post-ladder probe. Raw elapsed per config: "
-        + json.dumps(s["all_elapsed"]) + ";",
-        "  in-window co-tenant cores per sample: "
-        + json.dumps(s.get("all_cotenant", {})) + ".",
-        "",
-    ]
-    (REPO / "BENCH.md").write_text("\n".join(lines))
+    from logagg.session import get_spark
+
+    spark = get_spark(app_name=f"bench-{cores}", master=f"local[{cores}]")
+    e2e(spark, sf_dir, REPLICATE).agg(F.sum("n_rows")).collect()
+    job = e2e(spark, sf_dir, REPLICATE).agg(F.sum("n_rows").alias("records"))
+    t0 = time.perf_counter()
+    records = job.collect()[0]["records"]
+    print(json.dumps({"elapsed": time.perf_counter() - t0, "records": int(records)}))
+
+
+def _run_worker(cores: int, sf_dir: str) -> dict:
+    cmd = [sys.executable, __file__, f"--worker={cores}", f"--sf-dir={sf_dir}"]
+    out = subprocess.run(cmd, stdout=subprocess.PIPE, text=True, timeout=1800, check=True)
+    return json.loads(out.stdout.strip().splitlines()[-1])
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--scaling-worker", action="store_true")
-    ap.add_argument("--master", default=None)
-    ap.add_argument("--sf-dir", default=SF_DIR)
-    ap.add_argument("--replicate", type=int, default=1)
-    ap.add_argument("--rep-mode", choices=("disk", "union"), default=REP_MODE)
-    ap.add_argument("--skip-scaling", action="store_true")
-    ap.add_argument(
-        "--skip-headline",
-        action="store_true",
-        help="ladder only — for re-measuring scaling on a calmer box",
-    )
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
+    ap.add_argument("--worker", type=int, default=None, help=argparse.SUPPRESS)
     args = ap.parse_args()
-
-    if args.scaling_worker:
-        scaling_worker(args.master, args.sf_dir, args.replicate, args.rep_mode)
+    if args.worker is not None:
+        worker(args.worker, args.sf_dir)
         return
 
-    from logagg import synth
-    from logagg.session import get_spark
+    from logagg.session import default_cpus
 
-    synth.ensure_cache(args.sf_dir, expected=False)
-    spark = get_spark(app_name="bench", master=f"local[{CPUS}]")
-
-    # headline timings are BEST-OF-2 (the discipline the scaling ladder
-    # already applies): the first pass pays one-time costs a long production
-    # job amortizes — whole-stage-codegen JIT for this plan shape, Python
-    # worker pool spawn — and on this tenant-shared box single samples swing
-    # 2-4×. Sustained per-query cost is what BASELINE comparisons need.
-    HEADLINE_PASSES = 2
-    queries = {}
-    total = 0.0
-    from pyspark.sql import functions as F
-
-    records = 0
-    pipeline_sec = float("inf")
-    if not args.skip_headline:
-        for _ in range(HEADLINE_PASSES):
-            pipeline_df = _pipeline(spark, args.sf_dir)
-            t0 = time.time()
-            records = int(pipeline_df.agg(F.sum("n_rows")).collect()[0][0])
-            pipeline_sec = min(pipeline_sec, time.time() - t0)
-        queries["e2e_pipeline"] = round(pipeline_sec, 3)
-        total += pipeline_sec
-
-        for name, (fn, action) in _headline().items():
-            dt = float("inf")
-            for _ in range(HEADLINE_PASSES):
-                t0 = time.time()
-                try:
-                    action(fn(spark, args.sf_dir))
-                    dt = min(dt, time.time() - t0)
-                except Exception as e:  # noqa: BLE001
-                    print(f"bench query {name} failed: {e}", file=sys.stderr)
-                    dt = -1.0
-                    break
-            queries[name] = round(dt, 3)
-            if dt > 0:
-                total += dt
-    else:
-        pipeline_sec = 0.0
-
-    scaling = None if args.skip_scaling else run_scaling(args.sf_dir)
-
-    skipped = bool(args.skip_headline)
-    result = {
-        "metric": "e2e_parse_enrich_aggregate_seconds",
-        # a ladder-only artifact must not be misread as a 0-second headline
-        # run: value/records/rows_per_sec are null and flagged when skipped
-        "value": None if skipped else round(pipeline_sec, 3),
-        "unit": "sec",
-        "headline_skipped": skipped,
-        "queries": queries,
-        "sf": _sf_value(args.sf_dir),
+    hi = default_cpus()
+    lo = max(1, hi // 4)
+    best: dict[int, dict] = {}
+    for _ in range(RUNS):
+        for cores in (lo, hi):
+            r = _run_worker(cores, args.sf_dir)
+            if cores not in best or r["elapsed"] < best[cores]["elapsed"]:
+                best[cores] = r
+    rate = {c: r["records"] / r["elapsed"] for c, r in best.items()}
+    print(json.dumps({
         "sf_dir": args.sf_dir,
-        "records": None if skipped else records,
-        "rows_per_sec": (
-            round(records / pipeline_sec) if not skipped and pipeline_sec > 0 else None
-        ),
-        "total_sec": None if skipped else round(total, 3),
-        "scaling": scaling,
-    }
-    if scaling and not args.skip_headline:
-        # a ladder-only rerun must not clobber BENCH.md's headline table
-        write_bench_md(result)
-    print(json.dumps(result))
+        "replicate": REPLICATE,
+        "cores_lo": lo,
+        "cores_hi": hi,
+        "records": best[hi]["records"],
+        "rows_per_sec_lo": round(rate[lo]),
+        "rows_per_sec_hi": round(rate[hi]),
+        "elapsed_lo": round(best[lo]["elapsed"], 2),
+        "elapsed_hi": round(best[hi]["elapsed"], 2),
+        "efficiency": round((rate[hi] / rate[lo]) / (hi / lo), 3),
+    }))
 
 
 if __name__ == "__main__":

@@ -6,18 +6,18 @@ then find/display; here the same verbs run over the Spark engine:
     python -m logagg run   --sf-dir /root/testdata/sf0.001 --out /tmp/out
     python -m logagg find  --sf-dir ... --node n05 [--limit 20]
     python -m logagg view  --sf-dir ... --url-suffix /00000042
-    python -m logagg bench --sf-dir ...   (headline queries only)
 
 `run` executes the resumable batch pipeline (logagg.pipeline) and prints the
 stage ledger; `find`/`view` are the reference's query/display verbs
-(aggregator/view.py) rendered via logagg.view.render_lines.
+(aggregator/view.py) rendered via logagg.view.render_lines. Timing lives
+outside the CLI: perfbench, ``bench.py`` (the N→4N scaling proxy) and
+``tools/selfcheck.py``.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
-import sys
 
 from pyspark.sql import functions as F
 
@@ -70,14 +70,6 @@ def cmd_view(args) -> int:
     return 0 if rows else 1
 
 
-def cmd_bench(args) -> int:
-    import subprocess
-    from pathlib import Path
-
-    bench = Path(__file__).resolve().parent.parent / "bench.py"
-    return subprocess.call([sys.executable, str(bench), f"--sf-dir={args.sf_dir}", "--skip-scaling"])
-
-
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="logagg")
     ap.add_argument(
@@ -101,10 +93,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--sf-dir", required=True)
     p.add_argument("--url-suffix", required=True)
     p.set_defaults(fn=cmd_view)
-
-    p = sub.add_parser("bench", help="headline query timings")
-    p.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    p.set_defaults(fn=cmd_bench)
 
     args = ap.parse_args(argv)
     return args.fn(args)

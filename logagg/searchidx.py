@@ -16,7 +16,8 @@ Index layout (``build_index`` → ``<out_dir>/``):
   term-sliced posting list back to a corpus-sized docstats table would
   shuffle the whole corpus per query. Repeating a small integer costs
   ~nothing under parquet RLE; the join costs a shuffle.
-* ``meta/`` — one row: ``(n_docs, avgdl, num_buckets)``.
+* ``meta/`` — one row: ``(n_docs, avgdl, num_buckets)``, replaced through
+  ``util.swap_dir`` on every build, update and delete.
 
 Query shape (``bm25_search``, the plan that survives 100×): the query's
 terms resolve to ≤ |query| buckets, so the scan reads only those
@@ -80,8 +81,9 @@ from pyspark.sql import functions as F
 
 from logagg.util import data_files, read_parquet_or_none, recover_swap, swap_dir
 
-# compact_index replaces these through util.swap_dir; _read_meta, which
-# every entry point that touches them runs first, heals a dead swap
+# compact_index replaces these through util.swap_dir (and _write_meta the
+# meta dir); _read_meta, which every entry point runs first, heals a dead
+# swap of any of them
 _SWAPPED = ("postings", "doclens")
 
 SEARCH_TOKEN_RE = re.compile(r"[a-z0-9]+")
@@ -196,14 +198,17 @@ def _write_meta(
     # every one of them through a Python worker sequentially — measured
     # 4-6 s per meta rewrite on local[32] (guide §4: keep trivial rows out
     # of the Python boundary entirely)
-    spark.range(0, 1, 1, 1).select(
+    row = spark.range(0, 1, 1, 1).select(
         F.lit(int(n_docs)).cast("long").alias("n_docs"),
         F.lit(int(sum_dl)).cast("long").alias("sum_dl"),
         F.lit(float(avgdl)).cast("double").alias("avgdl"),
         F.lit(int(num_buckets)).cast("int").alias("num_buckets"),
         F.lit(int(gen)).cast("long").alias("gen"),
         F.lit(bool(positional)).alias("positional"),
-    ).write.mode("overwrite").parquet(f"{out_dir}/meta")
+    )
+    # swapped, never overwritten in place: a failed write leaves the last meta
+    with swap_dir(f"{out_dir}/meta") as tmp:
+        row.write.parquet(tmp)
     return {
         "n_docs": n_docs,
         "avgdl": avgdl,
@@ -214,7 +219,7 @@ def _write_meta(
 
 
 def _read_meta(spark: SparkSession, index_dir: str) -> dict:
-    for comp in _SWAPPED:
+    for comp in (*_SWAPPED, "meta"):
         recover_swap(f"{index_dir}/{comp}")
     d = spark.read.parquet(f"{index_dir}/meta").collect()[0].asDict()
     d.setdefault("gen", 0)
@@ -263,8 +268,8 @@ def update_index(
     a live doc double-counts it (use :func:`replace_docs` for re-crawls;
     dedup upstream exactly as the incremental MinHash index requires).
 
-    Not atomic across the writes (postings + doclens append, then meta
-    overwrite): on a cluster the group belongs in one table transaction
+    Not atomic across the writes (postings + doclens append, then the
+    meta swap): on a cluster the group belongs in one table transaction
     (Iceberg); a crash mid-way leaves the meta one batch stale —
     detectable, since meta is rewritten last."""
     spark = docs.sparkSession
@@ -393,9 +398,7 @@ def query_postings(
     ``num_buckets`` skips the meta re-read when the caller already holds
     it (one parquet scan per search, not two)."""
     if num_buckets is None:
-        num_buckets = spark.read.parquet(f"{index_dir}/meta").collect()[0][
-            "num_buckets"
-        ]
+        num_buckets = _read_meta(spark, index_dir)["num_buckets"]
     nb = num_buckets
     # bucket ids must come from the JVM xxhash64 — but as ONE 1-partition
     # all-literal row, not a parallelized Python list (createDataFrame of

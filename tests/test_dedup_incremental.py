@@ -20,8 +20,8 @@ def _full_pairs_frozen_stop(docs, stop):
     return dedup._verify_candidates(docs, cands, stop, "url", "text", "local", None)
 
 
-def test_incremental_equals_batch_restricted(spark, tmp_path):
-    pages = spark.read.parquet("/root/repo/.cache/pages/sf0.001/pages.parquet").select(
+def test_incremental_equals_batch_restricted(spark, pages_cache, tmp_path):
+    pages = spark.read.parquet(str(pages_cache / "pages.parquet")).select(
         "url", "text"
     )
     # deterministic 3-way split: corpus, increment 1, increment 2
@@ -66,8 +66,8 @@ def test_incremental_equals_batch_restricted(spark, tmp_path):
         d.unpersist()
 
 
-def test_index_append_mode_keeps_frozen_stop(spark, tmp_path):
-    pages = spark.read.parquet("/root/repo/.cache/pages/sf0.001/pages.parquet").select(
+def test_index_append_mode_keeps_frozen_stop(spark, pages_cache, tmp_path):
+    pages = spark.read.parquet(str(pages_cache / "pages.parquet")).select(
         "url", "text"
     )
     half = F.pmod(F.crc32(F.col("url").cast("binary")), F.lit(2))

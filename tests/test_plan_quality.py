@@ -50,44 +50,30 @@ def test_pack_sequences_plan_contract(spark):
 
 
 def test_search_graph_plan_contract(spark):
-    import sys
-    sys.path.insert(0, "tools")
     from explain_plans import search_graph_plan_contract
 
     assert search_graph_plan_contract(spark) == []
 
 
 def test_model_ops_plan_contract(spark):
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
     from explain_plans import model_ops_plan_contract
 
     assert model_ops_plan_contract(spark) == []
 
 
 def test_crawl_ops_plan_contract(spark):
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
     from explain_plans import crawl_ops_plan_contract
 
     assert crawl_ops_plan_contract(spark) == []
 
 
 def test_sketch_sample_plan_contract(spark):
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
     from explain_plans import sketch_sample_plan_contract
 
     assert sketch_sample_plan_contract(spark) == []
 
 
 def test_budget_bucket_plan_contract(spark):
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
     from explain_plans import budget_bucket_plan_contract
 
     assert budget_bucket_plan_contract(spark) == []

@@ -289,6 +289,60 @@ def test_compact_index_crash_between_renames_keeps_scores(spark, tmp_path, monke
     assert_same_scores()
 
 
+@pytest.mark.parametrize("window", ["job", "rename"])
+def test_meta_rewrite_crash_keeps_index_searchable(spark, tmp_path, monkeypatch, window):
+    """A meta rewrite killed mid-way (``job``: its Spark job dies after the
+    overwrite cleared the target; ``rename``: between the swap's renames)
+    leaves a meta in place: searches return the pre-crash scores and the
+    next update lands."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    idx = str(tmp_path / "idx")
+    items = sorted(CORPUS.items())
+    searchidx.build_index(
+        spark.createDataFrame(items[:3], "id string, text string"), idx, num_buckets=8
+    )
+    searchidx.update_index(spark.createDataFrame(items[3:], "id string, text string"), idx)
+    before = {q: _search_pairs(spark, idx, q) for q in QUERIES}
+    empty = spark.createDataFrame([], "id string, text string")
+
+    if window == "job":
+        real_parquet = DataFrameWriter.parquet
+
+        def killed(self, path, *args, **kwargs):
+            if os.path.basename(path).startswith("meta"):
+                # the real overwrite of a job whose task fails at run time
+                dying = self._df.select(
+                    F.raise_error(F.lit("killed mid-meta-write")).cast("long").alias("x")
+                )
+                real_parquet(dying.write.mode("overwrite"), path)
+            return real_parquet(self, path, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", killed)
+    else:
+        real_rename = os.rename
+
+        def killed(src, dst):
+            if os.fspath(dst) == f"{idx}/meta":
+                raise OSError("killed mid-meta-swap")
+            return real_rename(src, dst)
+
+        monkeypatch.setattr(os, "rename", killed)
+    with pytest.raises(Exception, match="killed"):
+        searchidx.update_index(empty, idx)
+    monkeypatch.undo()
+
+    for q in QUERIES:
+        after = _search_pairs(spark, idx, q)
+        assert [i for i, _ in after] == [i for i, _ in before[q]]
+        for (_, a), (_, w) in zip(after, before[q]):
+            assert a == pytest.approx(w, rel=1e-12)
+    assert searchidx.update_index(empty, idx)["n_docs"] == len(CORPUS)
+    assert searchidx.verify_index(spark, idx) == []
+
+
 PHRASE_CORPUS = {
     "p1": "the quick brown fox jumps over the lazy dog",
     "p2": "brown quick the fox — same words, no phrase",
