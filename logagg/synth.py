@@ -81,13 +81,13 @@ def _host_weights() -> list[float]:
 
 
 def n_pages_for(sf_name: str) -> int:
+    """Corpus size for a scale tag: a key of ``N_PAGES`` or ``sf<float>``."""
     if sf_name in N_PAGES:
         return N_PAGES[sf_name]
-    try:
-        sf = float(sf_name.removeprefix("sf"))
-    except ValueError:
-        sf = 0.001
-    return max(200, int(600_000 * sf))
+    m = re.fullmatch(r"sf(\d*\.?\d+)", sf_name)
+    if m is None:
+        raise ValueError(f"{sf_name!r} is not a scale tag (sf<float>, e.g. sf0.01)")
+    return max(200, int(600_000 * float(m[1])))
 
 
 def _message(rng: random.Random, lang: str) -> str:
@@ -564,15 +564,20 @@ def cache_dir_for(sf_dir: str) -> Path:
 def ensure_cache(sf_dir: str, expected: bool = True) -> Path:
     """Materialize (once) the pages corpus + lookups (+ expected tables) for
     the scale tag implied by ``sf_dir``'s basename. Idempotent and cheap when
-    the cache is already present."""
+    the cache is already present. Without a staged cache, a basename that is
+    not a scale tag raises ``ValueError`` before anything is created."""
     cdir = cache_dir_for(sf_dir)
     meta_path = cdir / "_meta.json"
     if meta_path.exists():
         meta = json.loads(meta_path.read_text())
         if meta.get("version") == GEN_VERSION and (meta.get("expected") or not expected):
             return cdir
-    cdir.mkdir(parents=True, exist_ok=True)
     sf_name = cdir.name
+    try:
+        n_pages_for(sf_name)
+    except ValueError as e:
+        raise ValueError(f"sf_dir {sf_dir!r} has no staged corpus at {cdir}: {e}") from None
+    cdir.mkdir(parents=True, exist_ok=True)
     cols = generate_pages(sf_name)
     _write_chunked(cdir / "pages.parquet", _pages_table(cols))
     host_geo, lang_locale = _lookup_tables()

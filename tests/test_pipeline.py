@@ -262,3 +262,20 @@ def test_pipeline_upgrades_staged_layout(spark, tmp_path):
     want = {r["route"]: r["n"] for r in route.route_counts(parse.parsed_records(pages)).collect()}
     assert results["route"]["sinks"] == want
     assert spark.read.parquet(str(out / "routed")).count() == _oracle_rows()
+
+
+def test_ensure_cache_rejects_unknown_sf_dir(tmp_path, monkeypatch):
+    """A mistyped ``--sf-dir`` names no scale tag: it raises, naming the
+    directory, instead of generating a stand-in corpus under the cache."""
+    import pytest
+
+    from logagg import synth
+
+    root = tmp_path / "cache"
+    monkeypatch.setattr(synth, "CACHE_ROOT", root)
+    sf_dir = tmp_path / "nonexistent-x"
+    sf_dir.mkdir()
+    with pytest.raises(ValueError, match="nonexistent-x"):
+        synth.ensure_cache(str(sf_dir))
+    assert not root.exists()
+    assert synth.n_pages_for("sf0.5") == 300_000  # sf<float> still sizes a corpus

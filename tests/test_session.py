@@ -1,8 +1,34 @@
-"""Session defaults are derived from the machine, with env overrides."""
+"""Session defaults are derived from the machine, with env overrides; the
+driver JVM's JIT flags and the workers' import path reach the processes."""
+
+import json
+import os
+import subprocess
+import sys
+import textwrap
 
 import pytest
 
 from logagg import session
+
+# 10x HotSpot's tier-4 defaults (5000, 600, 15000, 40000)
+TIER4 = {
+    "Tier4InvocationThreshold": "50000",
+    "Tier4MinInvocationThreshold": "6000",
+    "Tier4CompileThreshold": "150000",
+    "Tier4BackEdgeThreshold": "400000",
+}
+
+
+def tier4_options(spark) -> dict[str, str]:
+    """The JVM's effective value of each tier-4 flag. Spark's launcher passes
+    ``-XX:+IgnoreUnrecognizedVMOptions``, so a mistyped flag would only
+    show here."""
+    jvm = spark._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    return {name: bean.getVMOption(name).getValue() for name in TIER4}
 
 
 @pytest.fixture
@@ -57,3 +83,52 @@ def test_cli_cpus_defaults_to_session(monkeypatch):
         {"app_name": "logagg-cli", "master": None},
         {"app_name": "logagg-cli", "master": "local[3]"},
     ]
+
+
+def test_driver_jvm_runs_with_tier4_thresholds(spark):
+    assert tier4_options(spark) == TIER4
+
+
+def test_foreign_cwd_worker_imports_and_caller_java_options(tmp_path, pages_cache):
+    """From a directory outside the checkout, with no PYTHONPATH: a logagg
+    UDF runs in the Python workers, and the caller's extraJavaOptions reach
+    the driver JVM next to the tier-4 flags."""
+    import pyarrow.parquet as pq
+
+    script = textwrap.dedent(
+        f"""
+        import json, sys
+        sys.path.insert(0, {session.PACKAGE_ROOT!r})
+        from logagg import parse
+        from logagg.session import get_spark
+        from tests.test_session import tier4_options
+
+        spark = get_spark(
+            master="local[1]",
+            extra_conf={{"spark.driver.extraJavaOptions": "-Dlogagg.probe=1"}},
+        )
+        pages = spark.read.parquet({str(pages_cache / "pages.parquet")!r})
+        runtime = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+        print(json.dumps({{
+            "rows": parse.parsed_records(pages).count(),
+            "args": list(runtime.getInputArguments()),
+            "tier4": tier4_options(spark),
+        }}))
+        spark.stop()
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["LOGAGG_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert got["rows"] == pq.read_metadata(pages_cache / "expected_parsed.parquet").num_rows
+    assert "-Dlogagg.probe=1" in got["args"]
+    assert got["tier4"] == TIER4
